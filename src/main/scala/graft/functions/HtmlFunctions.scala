@@ -1,11 +1,13 @@
 package graft.functions
 
+import graft.dom.ExtractResult
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.FunctionIdentifier
+import org.apache.spark.sql.catalyst.{FunctionIdentifier, InternalRow}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, GenericInternalRow, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
-import org.apache.spark.sql.types.{BinaryType, DataType, StringType, LongType}
+import org.apache.spark.sql.catalyst.util.GenericArrayData
+import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 import org.apache.spark.sql.SparkSessionExtensions
 
@@ -30,172 +32,89 @@ abstract class HtmlKernelExpression extends UnaryExpression
     else TypeCheckResult.TypeCheckFailure(s"$prettyName requires BINARY input, got ${child.dataType}")
   override def nullable: Boolean = true
   @transient protected lazy val sink = new graft.dom.ExtractSink
-  protected def ex(bytes: Array[Byte]): graft.dom.ExtractResult =
+  protected def ex(bytes: Array[Byte]): ExtractResult =
     graft.dom.Extractor.extractInto(bytes, sink)
 }
 
-case class HtmlMainText(child: Expression) extends HtmlKernelExpression {
-  override def dataType: DataType = StringType
-  override protected def nullSafeEval(input: Any): Any =
-    UTF8String.fromString(ex(input.asInstanceOf[Array[Byte]]).mainText)
-  override protected def withNewChildInternal(newChild: Expression): HtmlMainText = copy(child = newChild)
-  override def prettyName: String = "html_main_text"
-}
-
-case class HtmlText(child: Expression) extends HtmlKernelExpression {
-  override def dataType: DataType = StringType
-  override protected def nullSafeEval(input: Any): Any =
-    UTF8String.fromString(ex(input.asInstanceOf[Array[Byte]]).text)
-  override protected def withNewChildInternal(newChild: Expression): HtmlText = copy(child = newChild)
-  override def prettyName: String = "html_text"
-}
-
-case class HtmlTitle(child: Expression) extends HtmlKernelExpression {
-  override def dataType: DataType = StringType
-  override protected def nullSafeEval(input: Any): Any =
-    UTF8String.fromString(ex(input.asInstanceOf[Array[Byte]]).title)
-  override protected def withNewChildInternal(newChild: Expression): HtmlTitle = copy(child = newChild)
-  override def prettyName: String = "html_title"
-}
-
-case class HtmlLang(child: Expression) extends HtmlKernelExpression {
-  override def dataType: DataType = StringType
-  override protected def nullSafeEval(input: Any): Any =
-    UTF8String.fromString(ex(input.asInstanceOf[Array[Byte]]).declaredLang)
-  override protected def withNewChildInternal(newChild: Expression): HtmlLang = copy(child = newChild)
-  override def prettyName: String = "html_lang"
-}
-
-case class HtmlTagCount(child: Expression) extends HtmlKernelExpression {
-  override def dataType: DataType = LongType
-  override protected def nullSafeEval(input: Any): Any =
-    ex(input.asInstanceOf[Array[Byte]]).nTags
-  override protected def withNewChildInternal(newChild: Expression): HtmlTagCount = copy(child = newChild)
-  override def prettyName: String = "html_tag_count"
-}
-
-case class HtmlSpans(child: Expression) extends HtmlKernelExpression {
-  override def dataType: DataType = HtmlSpans.spanArrayType
-  override protected def nullSafeEval(input: Any): Any = {
-    val r = ex(input.asInstanceOf[Array[Byte]])
-    new org.apache.spark.sql.catalyst.util.GenericArrayData(
-      r.spans.map(s => org.apache.spark.sql.catalyst.InternalRow(
-        s.start, s.end, UTF8String.fromString(s.path), s.block, s.link, s.kept)).toArray[Any])
-  }
-  override protected def withNewChildInternal(newChild: Expression): HtmlSpans = copy(child = newChild)
-  override def prettyName: String = "html_spans"
-}
-
-object HtmlSpans {
-  import org.apache.spark.sql.types._
-  val spanArrayType: DataType = ArrayType(StructType(Seq(
-    StructField("start", IntegerType, nullable = false),
-    StructField("end", IntegerType, nullable = false),
-    StructField("path", StringType, nullable = false),
-    StructField("block", IntegerType, nullable = false),
-    StructField("link", BooleanType, nullable = false),
-    StructField("kept", BooleanType, nullable = false))), containsNull = false)
-}
-
-case class HtmlLinks(child: Expression) extends HtmlKernelExpression {
-  override def dataType: DataType =
-    org.apache.spark.sql.types.ArrayType(StringType, containsNull = false)
-  override protected def nullSafeEval(input: Any): Any = {
-    val r = ex(input.asInstanceOf[Array[Byte]])
-    new org.apache.spark.sql.catalyst.util.GenericArrayData(
-      r.links.map(UTF8String.fromString).toArray[Any])
-  }
-  override protected def withNewChildInternal(newChild: Expression): HtmlLinks = copy(child = newChild)
-  override def prettyName: String = "html_links"
-}
-
-/** Open Graph pairs as array<struct<prop,content>> — array, not map, so
-  * repeated properties (multiple og:image) and document order survive.
+/** One kernel capture on the SQL surface: `html_<name>(html)` returns
+  * `get(result)` as `dataType`, and `html_extract_all` serves it as struct
+  * field `field`. Fusable captures may share one kernel run per page
+  * ([[CollapseHtmlKernelCalls]]); spans, og pairs and JSON-LD stay
+  * standalone — they are rarely combined and their nested types would bloat
+  * every fused row.
   */
-case class HtmlOg(child: Expression) extends HtmlKernelExpression {
-  override def dataType: DataType = HtmlOg.ogArrayType
-  override protected def nullSafeEval(input: Any): Any = {
-    val r = ex(input.asInstanceOf[Array[Byte]])
-    new org.apache.spark.sql.catalyst.util.GenericArrayData(
-      r.ogProps.indices.map(i => org.apache.spark.sql.catalyst.InternalRow(
-        UTF8String.fromString(r.ogProps(i)), UTF8String.fromString(r.ogVals(i)))).toArray[Any])
-  }
-  override protected def withNewChildInternal(newChild: Expression): HtmlOg = copy(child = newChild)
-  override def prettyName: String = "html_og"
+final case class Capture(name: String, field: String, dataType: DataType,
+    get: ExtractResult => Any, fusable: Boolean) {
+  def sqlName: String = s"html_$name"
 }
 
-object HtmlOg {
-  import org.apache.spark.sql.types._
-  val ogArrayType: DataType = ArrayType(StructType(Seq(
-    StructField("prop", StringType, nullable = false),
-    StructField("content", StringType, nullable = false))), containsNull = false)
+object Capture {
+  private def str(f: ExtractResult => String): ExtractResult => Any =
+    r => UTF8String.fromString(f(r))
+  private def strs(f: ExtractResult => Seq[String]): ExtractResult => Any =
+    r => new GenericArrayData(f(r).map(UTF8String.fromString).toArray[Any])
+  private val strArray = ArrayType(StringType, containsNull = false)
+  private def structArray(fields: (String, DataType)*): DataType =
+    ArrayType(StructType(fields.map { case (n, t) => StructField(n, t, nullable = false) }),
+      containsNull = false)
+
+  /** The capture table: the one list of what the SQL surface returns. The
+    * fusable entries, in this order, are `html_extract_all`'s struct.
+    */
+  val all: Seq[Capture] = Seq(
+    Capture("main_text", "main_text", StringType, str(_.mainText), fusable = true),
+    Capture("text", "full_text", StringType, str(_.text), fusable = true),
+    Capture("title", "title", StringType, str(_.title), fusable = true),
+    Capture("lang", "lang", StringType, str(_.declaredLang), fusable = true),
+    Capture("tag_count", "tag_count", LongType, _.nTags, fusable = true),
+    Capture("links", "links", strArray, strs(_.links), fusable = true),
+    Capture("errors", "errors", strArray, strs(_.errors), fusable = true),
+    Capture("spans", "spans",
+      structArray("start" -> IntegerType, "end" -> IntegerType, "path" -> StringType,
+        "block" -> IntegerType, "link" -> BooleanType, "kept" -> BooleanType),
+      r => new GenericArrayData(r.spans.map(s => InternalRow(
+        s.start, s.end, UTF8String.fromString(s.path), s.block, s.link, s.kept)).toArray[Any]),
+      fusable = false),
+    // Open Graph pairs as an array, not a map, so repeated properties
+    // (multiple og:image) and document order survive
+    Capture("og", "og", structArray("prop" -> StringType, "content" -> StringType),
+      r => new GenericArrayData(r.ogProps.indices.map(i => InternalRow(
+        UTF8String.fromString(r.ogProps(i)), UTF8String.fromString(r.ogVals(i)))).toArray[Any]),
+      fusable = false),
+    // raw <script type="application/ld+json"> blocks, document order
+    Capture("jsonld", "json_ld", strArray, strs(_.jsonLd), fusable = false))
+
+  private val byName: Map[String, Capture] = all.map(c => c.name -> c).toMap
+  def apply(name: String): Capture = byName(name)
+
+  val fusableNames: Seq[String] = all.filter(_.fusable).map(_.name)
 }
 
-/** Raw `<script type="application/ld+json">` blocks in document order —
-  * schema.org structured data, ready for `get_json_object`/`from_json`.
+/** `html_<name>(html)`: one capture of one kernel run. */
+case class HtmlCapture(child: Expression, name: String) extends HtmlKernelExpression {
+  @transient private lazy val capture = Capture(name)
+  override def dataType: DataType = capture.dataType
+  override protected def nullSafeEval(input: Any): Any =
+    capture.get(ex(input.asInstanceOf[Array[Byte]]))
+  override protected def withNewChildInternal(newChild: Expression): HtmlCapture = copy(child = newChild)
+  override def prettyName: String = capture.sqlName
+}
+
+/** Several captures of ONE kernel run as a struct, field i = `captures(i)`.
+  * `html_extract_all(html)` serves every fusable capture; the fusion rule
+  * builds it with just the captures a projection asks for.
   */
-case class HtmlJsonLd(child: Expression) extends HtmlKernelExpression {
-  override def dataType: DataType =
-    org.apache.spark.sql.types.ArrayType(StringType, containsNull = false)
+case class HtmlExtractAll(child: Expression, captures: Seq[String] = Capture.fusableNames)
+    extends HtmlKernelExpression {
+  @transient private lazy val cs = captures.map(Capture(_)).toArray
+  @transient override lazy val dataType: DataType =
+    StructType(cs.toSeq.map(c => StructField(c.field, c.dataType, nullable = false)))
   override protected def nullSafeEval(input: Any): Any = {
     val r = ex(input.asInstanceOf[Array[Byte]])
-    new org.apache.spark.sql.catalyst.util.GenericArrayData(
-      r.jsonLd.map(UTF8String.fromString).toArray[Any])
-  }
-  override protected def withNewChildInternal(newChild: Expression): HtmlJsonLd = copy(child = newChild)
-  override def prettyName: String = "html_jsonld"
-}
-
-case class HtmlErrors(child: Expression) extends HtmlKernelExpression {
-  override def dataType: DataType =
-    org.apache.spark.sql.types.ArrayType(StringType, containsNull = false)
-  override protected def nullSafeEval(input: Any): Any = {
-    val r = ex(input.asInstanceOf[Array[Byte]])
-    new org.apache.spark.sql.catalyst.util.GenericArrayData(
-      r.errors.map(UTF8String.fromString).toArray[Any])
-  }
-  override protected def withNewChildInternal(newChild: Expression): HtmlErrors = copy(child = newChild)
-  override def prettyName: String = "html_errors"
-}
-
-/** Every scalar capture of one kernel run as a single struct — the fusion
-  * target for [[CollapseHtmlKernelCalls]]: `SELECT html_main_text(h),
-  * html_title(h), html_links(h)` naively parses each page three times;
-  * rewritten through this expression the page parses ONCE. (Spans and og
-  * pairs stay standalone expressions — they are rarely combined and their
-  * nested struct types would bloat every fused row.)
-  */
-case class HtmlExtractAll(child: Expression) extends HtmlKernelExpression {
-  override def dataType: DataType = HtmlExtractAll.structType
-  override protected def nullSafeEval(input: Any): Any = {
-    val r = ex(input.asInstanceOf[Array[Byte]])
-    org.apache.spark.sql.catalyst.InternalRow(
-      UTF8String.fromString(r.mainText),
-      UTF8String.fromString(r.text),
-      UTF8String.fromString(r.title),
-      UTF8String.fromString(r.declaredLang),
-      r.nTags,
-      new org.apache.spark.sql.catalyst.util.GenericArrayData(
-        r.links.map(UTF8String.fromString).toArray[Any]),
-      new org.apache.spark.sql.catalyst.util.GenericArrayData(
-        r.errors.map(UTF8String.fromString).toArray[Any]))
+    new GenericInternalRow(cs.map(_.get(r)))
   }
   override protected def withNewChildInternal(newChild: Expression): HtmlExtractAll = copy(child = newChild)
   override def prettyName: String = "html_extract_all"
-}
-
-object HtmlExtractAll {
-  import org.apache.spark.sql.types._
-  val fieldNames: Seq[String] =
-    Seq("main_text", "full_text", "title", "lang", "tag_count", "links", "errors")
-  val structType: StructType = StructType(Seq(
-    StructField("main_text", StringType, nullable = false),
-    StructField("full_text", StringType, nullable = false),
-    StructField("title", StringType, nullable = false),
-    StructField("lang", StringType, nullable = false),
-    StructField("tag_count", LongType, nullable = false),
-    StructField("links", ArrayType(StringType, containsNull = false), nullable = false),
-    StructField("errors", ArrayType(StringType, containsNull = false), nullable = false)))
 }
 
 /** Optimizer rule: common-subexpression elimination for the OPAQUE kernel.
@@ -204,9 +123,9 @@ object HtmlExtractAll {
   * functions on the same column parses every page k times. This rule
   * rewrites any Project carrying ≥2 fusable kernel calls over one child
   * into a two-level Project: the inner level runs [[HtmlExtractAll]] once
-  * per page, the outer reads struct fields. CollapseProject will not merge
-  * the levels back — the alias is non-cheap and referenced multiple times,
-  * exactly its no-duplication guard.
+  * per page over the captures called, the outer reads struct fields.
+  * CollapseProject will not merge the levels back — the alias is non-cheap
+  * and referenced multiple times, exactly its no-duplication guard.
   *
   * Injected via `GraftExtensions` (config path) or
   * `HtmlFunctions.registerRule` (live-session path, like `register`).
@@ -216,63 +135,42 @@ object CollapseHtmlKernelCalls
   import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Project}
   import org.apache.spark.sql.catalyst.expressions.{Alias, GetStructField, NamedExpression}
 
-  /** Struct slot served by [[HtmlExtractAll]] for each fusable call type. */
-  private def fieldOf(e: Expression): Int = e match {
-    case _: HtmlMainText => 0
-    case _: HtmlText => 1
-    case _: HtmlTitle => 2
-    case _: HtmlLang => 3
-    case _: HtmlTagCount => 4
-    case _: HtmlLinks => 5
-    case _: HtmlErrors => 6
-    case _ => -1
-  }
-
   override def apply(plan: LogicalPlan): LogicalPlan = plan transform {
     case p @ Project(projectList, child) =>
       val calls = projectList.flatMap(_.collect {
-        case k: HtmlKernelExpression if fieldOf(k) >= 0 => k
+        case k: HtmlCapture if Capture(k.name).fusable => k
       })
       // fuse only when one child expression feeds ≥2 kernel calls — a
       // single call is already one parse, and distinct children can't share
       val fusable = calls.groupBy(_.child.canonicalized).filter(_._2.size >= 2)
       if (fusable.isEmpty) p
       else {
-        val aliasFor = fusable.map { case (canon, ks) =>
-          canon -> Alias(HtmlExtractAll(ks.head.child), "_html_all")()
+        val fused = fusable.map { case (canon, ks) =>
+          val all = HtmlExtractAll(ks.head.child, ks.map(_.name).distinct)
+          canon -> (all.captures, Alias(all, "_html_all")())
         }
         val newList = projectList.map(_.transform {
-          case k: HtmlKernelExpression
-              if fieldOf(k) >= 0 && aliasFor.contains(k.child.canonicalized) =>
-            GetStructField(aliasFor(k.child.canonicalized).toAttribute, fieldOf(k),
-              Some(HtmlExtractAll.fieldNames(fieldOf(k))))
+          case k: HtmlCapture if Capture(k.name).fusable && fused.contains(k.child.canonicalized) =>
+            val (captures, alias) = fused(k.child.canonicalized)
+            GetStructField(alias.toAttribute, captures.indexOf(k.name), Some(Capture(k.name).field))
         }.asInstanceOf[NamedExpression])
-        Project(newList, Project(child.output ++ aliasFor.values.toSeq, child))
+        Project(newList, Project(child.output ++ fused.values.map(_._2).toSeq, child))
       }
   }
 }
 
 object HtmlFunctions {
-  private val fns: Seq[(String, Seq[Expression] => Expression)] = Seq(
-    "html_main_text" -> (args => HtmlMainText(args.head)),
-    "html_text" -> (args => HtmlText(args.head)),
-    "html_title" -> (args => HtmlTitle(args.head)),
-    "html_lang" -> (args => HtmlLang(args.head)),
-    "html_tag_count" -> (args => HtmlTagCount(args.head)),
-    "html_spans" -> (args => HtmlSpans(args.head)),
-    "html_errors" -> (args => HtmlErrors(args.head)),
-    "html_links" -> (args => HtmlLinks(args.head)),
-    "html_og" -> (args => HtmlOg(args.head)),
-    "html_jsonld" -> (args => HtmlJsonLd(args.head)),
-    "html_extract_all" -> (args => HtmlExtractAll(args.head))
-  )
+  /** Every SQL function: one per capture, plus `html_extract_all`. */
+  private[functions] val fns: Seq[(String, Seq[Expression] => Expression)] =
+    Capture.all.map(c => c.sqlName -> ((args: Seq[Expression]) => HtmlCapture(args.head, c.name))) :+
+      ("html_extract_all" -> ((args: Seq[Expression]) => HtmlExtractAll(args.head)))
+
+  private[functions] def info(name: String) =
+    new ExpressionInfo("graft.functions.HtmlFunctions", name)
 
   /** Imperative registration — works on any live session (no config needed). */
   def register(spark: SparkSession): Unit = fns.foreach { case (name, builder) =>
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier(name),
-      new ExpressionInfo("graft.functions.HtmlFunctions", name),
-      builder)
+    spark.sessionState.functionRegistry.registerFunction(FunctionIdentifier(name), info(name), builder)
   }
 
   /** Live-session injection of the kernel-call fusion rule (idempotent). */
@@ -285,22 +183,9 @@ object HtmlFunctions {
 /** Config-based registration: `spark.sql.extensions=graft.functions.GraftExtensions`. */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
-    Seq(
-    ("html_main_text", (args: Seq[Expression]) => HtmlMainText(args.head)),
-    ("html_text", (args: Seq[Expression]) => HtmlText(args.head)),
-    ("html_title", (args: Seq[Expression]) => HtmlTitle(args.head)),
-    ("html_lang", (args: Seq[Expression]) => HtmlLang(args.head)),
-    ("html_tag_count", (args: Seq[Expression]) => HtmlTagCount(args.head)),
-    ("html_spans", (args: Seq[Expression]) => HtmlSpans(args.head)),
-    ("html_errors", (args: Seq[Expression]) => HtmlErrors(args.head)),
-    ("html_links", (args: Seq[Expression]) => HtmlLinks(args.head)),
-    ("html_og", (args: Seq[Expression]) => HtmlOg(args.head)),
-    ("html_jsonld", (args: Seq[Expression]) => HtmlJsonLd(args.head)),
-    ("html_extract_all", (args: Seq[Expression]) => HtmlExtractAll(args.head))
-  ).foreach { case (name, builder) =>
-    ext.injectFunction((FunctionIdentifier(name),
-      new ExpressionInfo("graft.functions.HtmlFunctions", name), builder))
-  }
+    HtmlFunctions.fns.foreach { case (name, builder) =>
+      ext.injectFunction((FunctionIdentifier(name), HtmlFunctions.info(name), builder))
+    }
     ext.injectOptimizerRule(_ => CollapseHtmlKernelCalls)
   }
 }

@@ -38,7 +38,7 @@ object AnnIndex {
 
   private val ClusterWidth = 5
 
-  private def pad(c: Int): String = s"%0${ClusterWidth}d".format(c)
+  private[graft] def pad(c: Int): String = s"%0${ClusterWidth}d".format(c)
 
   // ------------------------------------------------------------------
   // OPQ — parametric Optimized Product Quantization (Ge, He, Ke & Sun,
@@ -211,6 +211,7 @@ object AnnIndex {
     val nl = if (nlist > 0) nlist
     else math.max(4, math.min(1024, math.sqrt(n.toDouble).toInt))
     val centroids = Ann.ivfTrain(unit, nl, iters)
+    require(centroids.nonEmpty, "trainModel: no vectors to train on (empty input)")
     val dim = centroids(0).length
     require(dim % m == 0, s"dim $dim not divisible by m=$m")
     val dsub = dim / m

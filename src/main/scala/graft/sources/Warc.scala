@@ -63,6 +63,27 @@ object Warc {
     */
   val maxRecordBytes: Int = 256 << 20
 
+  /** A Content-Length value, or -1 when malformed. Long: real archives hold
+    * records over 2 GiB, and those must reach the oversize skip.
+    */
+  private def contentLength(v: String): Long = v.toLongOption.filter(_ >= 0).getOrElse(-1L)
+
+  /** The next `len` body bytes, or null when `len` is over
+    * [[maxRecordBytes]]: an oversized body (zip bomb, corrupt or huge
+    * declaration) is skipped WITHOUT materializing it, so the stream stays
+    * aligned on the next record.
+    */
+  private def readBody(bin: java.io.InputStream, len: Long): Array[Byte] =
+    if (len <= maxRecordBytes) bin.readNBytes(len.toInt)
+    else {
+      var left = len
+      while (left > 0) {
+        val n = bin.skip(left)
+        if (n <= 0) left = 0 else left -= n
+      }
+      null
+    }
+
   /** One serialized record: url, timestamp, and the record block (HTTP
     * response block or raw body). Public — Dataset encoder payload.
     */
@@ -366,7 +387,7 @@ object Warc {
             var refers: String = null
             var refersDate = 0L
             var digest: String = null
-            var len = -1
+            var len = -1L
             var h = line()
             while (h != null && h.nonEmpty) {
               val i = h.indexOf(':')
@@ -381,15 +402,15 @@ object Warc {
                   case "WARC-Refers-To-Date" => refersDate = math.max(parseTs(v), 0L)
                   case "WARC-Payload-Digest" =>
                     digest = if (v.startsWith("md5:")) v.substring(4) else v
-                  case "Content-Length" => len = v.toIntOption.getOrElse(-1)
+                  case "Content-Length" => len = contentLength(v)
                   case _ => ()
                 }
               }
               h = line()
             }
             if (len >= 0) {
-              bin.readNBytes(len) // skip body (empty for our revisits)
-              if (typ == "revisit" && url != null && refers != null && date >= 0)
+              val body = readBody(bin, len) // skipped (empty for our revisits)
+              if (body != null && typ == "revisit" && url != null && refers != null && date >= 0)
                 return (url, date, refers, refersDate, if (digest == null) "" else digest)
             }
           }
@@ -562,7 +583,7 @@ object Warc {
           var typ: String = null
           var url: String = null
           var date: String = null
-          var len = -1
+          var len = -1L
           var h = line()
           while (h != null && h.nonEmpty) {
             val i = h.indexOf(':')
@@ -574,38 +595,28 @@ object Warc {
                 case "WARC-Target-URI" => url = v
                 case "WARC-Date" => date = v
                 // malformed length → skip the record, never kill the task
-                case "Content-Length" => len = v.toIntOption.getOrElse(-1)
+                case "Content-Length" => len = contentLength(v)
                 case _ => ()
               }
             }
             h = line()
           }
-          if (len >= 0 && len <= maxRecordBytes) {
-            val block = bin.readNBytes(len)
-            if (block.length == len && (typ == null || typ == wantType) && url != null) {
-              // conversion records carry plain text — no HTTP envelope
-              val (raw, charset) =
-                if (wantType == "response") stripHttpHeadersCs(block) else (block, null)
-              val body = CharsetSniff.toUtf8(raw, charset)
-              // a CORRUPT WARC-Date skips the record (the parseRevisitStream
-              // rule — never a DateTimeParseException killing the task,
-              // never a silent mis-stamp); an ABSENT date keeps the
-              // legacy epoch stamp (fuzz-spec-pinned behavior)
-              val tsMs =
-                if (date == null) 0L
-                else try java.time.Instant.parse(date).toEpochMilli
-                     catch { case _: Exception => -1L }
-              if (tsMs >= 0)
-                return PageRow(url, new java.sql.Timestamp(tsMs), body, null, null)
-            }
-          } else if (len > maxRecordBytes) {
-            // oversized declaration (zip-bomb / corrupt length): skip the
-            // body WITHOUT materializing it, stay stream-aligned
-            var left = len.toLong
-            while (left > 0) {
-              val n = bin.skip(left)
-              if (n <= 0) { left = 0 } else left -= n
-            }
+          val block = if (len >= 0) readBody(bin, len) else null
+          if (block != null && block.length == len && (typ == null || typ == wantType) && url != null) {
+            // conversion records carry plain text — no HTTP envelope
+            val (raw, charset) =
+              if (wantType == "response") stripHttpHeadersCs(block) else (block, null)
+            val body = CharsetSniff.toUtf8(raw, charset)
+            // a CORRUPT WARC-Date skips the record (the parseRevisitStream
+            // rule — never a DateTimeParseException killing the task,
+            // never a silent mis-stamp); an ABSENT date keeps the
+            // legacy epoch stamp (fuzz-spec-pinned behavior)
+            val tsMs =
+              if (date == null) 0L
+              else try java.time.Instant.parse(date).toEpochMilli
+                   catch { case _: Exception => -1L }
+            if (tsMs >= 0)
+              return PageRow(url, new java.sql.Timestamp(tsMs), body, null, null)
           }
         }
         l0 = line()

@@ -3,7 +3,7 @@ package graft.spark
 import graft.core._
 import graft.dom._
 import org.apache.spark.TaskContext
-import org.apache.spark.sql.{Dataset, SparkSession}
+import org.apache.spark.sql.Dataset
 import org.apache.spark.sql.functions._
 import org.apache.spark.util.CollectionAccumulator
 
@@ -38,6 +38,22 @@ final case class Extracted(
     truncated: Boolean,
     bytes_in: Long
 )
+
+object Extracted {
+  /** The row for a page the kernel extracted. */
+  def from(p: PageRow, r: ExtractResult): Extracted =
+    Extracted(p.url, p.lang, r.mainText, r.text, r.title, r.spans, r.links, r.anchors,
+      r.imgSrcs, r.imgAlts, r.ogProps, r.ogVals, r.metaRobots, r.baseHref, r.canonical,
+      r.declaredLang, r.jsonLd, r.errors, r.spans.length, r.nTokens, r.nTags, r.nErrors,
+      r.truncated, p.html.length.toLong)
+
+  /** The row for a page the kernel did not run on: empty captures and the
+    * single error `code`.
+    */
+  def failed(p: PageRow, code: String, truncated: Boolean, bytesIn: Long): Extracted =
+    Extracted(p.url, p.lang, "", "", "", Nil, Nil, Nil, Nil, Nil, Nil, Nil, "", "", "", "",
+      Nil, Seq(code), 0, 0L, 0L, 1, truncated, bytesIn)
+}
 
 /** Global row ordinals covered by a partition: lo = partition_id << 33 plus
   * the local index (the `monotonically_increasing_id` convention — unique
@@ -75,16 +91,12 @@ final case class PageRowF(
     input_file: String
 )
 
-/** The extraction pipeline: scan → skew-isolating repartition →
-  * mapPartitions(tokenizer+DOM kernel) → extracted rows ‖ lineage rows.
+/** The extraction pipeline: scan → mapPartitions(tokenizer+DOM kernel) →
+  * extracted rows ‖ lineage rows.
   *
   * Scale design (the 100 TB / 10^12-doc story, tested at local[32]):
   *   - The kernel is a single typed mapPartitions: O(bytes) per page, zero
   *     driver involvement, no collect anywhere.
-  *   - Size-skew isolation: pages above `bigBytes` are routed to their own
-  *     partition set so a handful of megabyte pages can never straggle a
-  *     partition of normal pages (explicit salting by xxhash64(url) within
-  *     each class). This mirrors salted repartitioning at cluster scale.
   *   - Lineage rows ride a CollectionAccumulator (one tiny row per partition,
   *     O(partitions) driver memory, not O(rows)) and are appended to a
   *     parquet metrics table after each chunk commit.
@@ -94,34 +106,15 @@ final case class PageRowF(
   */
 object ExtractJob {
 
-  /** Kernel over one page — exactly the single-node oracle (`Extractor`), so
-    * Spark(k partitions) ≡ oracle by construction (tested in SparkJobSpec).
-    */
-  def extractRow(p: PageRow): Extracted = {
-    val r = Extractor.extract(p.html)
-    Extracted(p.url, p.lang, r.mainText, r.text, r.title, r.spans, r.links, r.anchors, r.imgSrcs, r.imgAlts, r.ogProps, r.ogVals, r.metaRobots, r.baseHref, r.canonical, r.declaredLang, r.jsonLd, r.errors,
-      r.spans.length, r.nTokens, r.nTags, r.nErrors, r.truncated,
-      p.html.length.toLong)
-  }
-
-  /** Threshold above which a page is considered pathological (size skew). */
-  val bigBytes = 262144
-
-  /** Extraction kernel over the pages Dataset.
-    *
-    * Default path (`salted = false`) is a NARROW map: extraction is per-row,
-    * so no shuffle of the html corpus is ever justified — parallelism comes
-    * from input splits (`spark.sql.files.maxPartitionBytes` at a real table;
-    * the pre-partitioned synthesis here), and this is what makes the job
-    * scale linearly with executors. Per-row cost outliers are bounded by the
-    * tokenizer step budget, so a pathological page costs O(64·bytes) at
-    * worst, not unbounded time.
-    *
-    * `salted = true` adds the explicit size-isolating salted repartition
-    * (big pages ≥ bigBytes get their own partition set, both classes spread
-    * by xxhash64(url)) — for inputs whose splits are pathologically skewed
-    * (e.g. a few files full of megabyte pages). It costs a full shuffle of
-    * the corpus; at 100 TB you only pay that when split-level skew is real.
+  /** Extraction kernel over the pages Dataset: a NARROW map. Extraction is
+    * per-row, so no shuffle of the html corpus is ever justified —
+    * parallelism comes from input splits (`spark.sql.files.maxPartitionBytes`
+    * at a real table; the pre-partitioned synthesis here), and this is what
+    * makes the job scale linearly with executors. Per-row cost outliers are
+    * bounded by the tokenizer step budget, so a pathological page costs
+    * O(64·bytes) at worst, not unbounded time; `maxTaskBytes` bounds a
+    * pathologically large split. `numPartitions` does not affect the plan:
+    * the output keeps the input's partitioning.
     */
   def extract(
       pages: Dataset[PageRow],
@@ -129,25 +122,10 @@ object ExtractJob {
       numPartitions: Int,
       lineage: CollectionAccumulator[LineageRow] = null,
       chunk: Int = 0,
-      salted: Boolean = false,
-      maxTaskBytes: Long = Long.MaxValue,
-      lean: Boolean = false
+      maxTaskBytes: Long = Long.MaxValue
   ): Dataset[Extracted] = {
-    val spark = pages.sparkSession
-    import spark.implicits._
-    val bigParts = math.max(numPartitions / 8, 1)
-    val normParts = math.max(numPartitions - bigParts, 1)
-    // Size-class spreading is BEST-EFFORT: repartition applies HashPartitioning
-    // to this expression, so the two classes can still hash-collide into the
-    // same physical partition. Big pages concentrate into ~bigParts distinct
-    // expression values (vs normParts for normal pages), which spreads each
-    // class; hard physical isolation would need an RDD identity Partitioner
-    // and is not worth leaving the Dataset API for.
-    val part = when(length($"html") >= bigBytes, pmod(xxhash64($"url"), lit(bigParts)))
-      .otherwise(lit(bigParts) + pmod(xxhash64($"url"), lit(normParts)))
-    val routed = if (salted) pages.repartition(numPartitions, part).as[PageRow] else pages
-    routed.mapPartitions(it =>
-      kernelIterator(it, () => "", runId, lineage, chunk, maxTaskBytes, lean))
+    import pages.sparkSession.implicits._
+    pages.mapPartitions(it => kernelIterator(it, () => "", runId, lineage, chunk, maxTaskBytes))
   }
 
   /** File-backed entry: same kernel, but each partition's lineage row records
@@ -159,8 +137,7 @@ object ExtractJob {
       runId: String,
       lineage: CollectionAccumulator[LineageRow] = null,
       chunk: Int = 0,
-      maxTaskBytes: Long = Long.MaxValue,
-      lean: Boolean = false
+      maxTaskBytes: Long = Long.MaxValue
   ): Dataset[Extracted] = {
     val spark = pages.sparkSession
     import spark.implicits._
@@ -173,7 +150,7 @@ object ExtractJob {
           if (f.input_file != null && f.input_file.nonEmpty) files += f.input_file
           PageRow(f.url, f.warc_ts, f.html, f.text, f.lang)
         }
-        kernelIterator(it, () => files.mkString(";"), runId, lineage, chunk, maxTaskBytes, lean)
+        kernelIterator(it, () => files.mkString(";"), runId, lineage, chunk, maxTaskBytes)
       }
   }
 
@@ -183,16 +160,16 @@ object ExtractJob {
     * splits (north star "per-partition size caps"): once a task has pushed
     * that many html bytes through the tokenizer, remaining rows are emitted
     * as empty/truncated rows flagged TASK_BYTE_CAP and counted in lineage —
-    * explicit, lineage-visible loss instead of an unbounded straggler.
+    * explicit, lineage-visible loss instead of an unbounded straggler. With
+    * no lineage and no cap (the streaming path) it is a plain per-row map.
     */
-  private def kernelIterator(
+  private[graft] def kernelIterator(
       it: Iterator[PageRow],
-      inputFiles: () => String,
-      runId: String,
-      lineage: CollectionAccumulator[LineageRow],
-      chunk: Int,
-      maxTaskBytes: Long,
-      lean: Boolean
+      inputFiles: () => String = () => "",
+      runId: String = "",
+      lineage: CollectionAccumulator[LineageRow] = null,
+      chunk: Int = 0,
+      maxTaskBytes: Long = Long.MaxValue
   ): Iterator[Extracted] = {
     val t0 = System.currentTimeMillis()
     var docs = 0L
@@ -223,24 +200,17 @@ object ExtractJob {
         if (p.html == null) {
           // real crawl tables carry null bodies (fetch failures, truncated
           // records): an error row, never an NPE'd task at 100 TB
-          Extracted(p.url, p.lang, "", "", "", Nil, Nil, Nil, Nil, Nil, Nil, Nil, "", "", "", "", Nil, Seq("NULL_HTML"),
-            0, 0L, 0L, 1, truncated = false, 0L)
+          Extracted.failed(p, "NULL_HTML", truncated = false, 0L)
         } else if (bytes >= maxTaskBytes) {
           capped += 1
           bytes += p.html.length
-          Extracted(p.url, p.lang, "", "", "", Nil, Nil, Nil, Nil, Nil, Nil, Nil, "", "", "", "", Nil, Seq("TASK_BYTE_CAP"),
-            0, 0L, 0L, 1, truncated = true, p.html.length.toLong)
+          Extracted.failed(p, "TASK_BYTE_CAP", truncated = true, p.html.length.toLong)
         } else {
           val r = Extractor.extractInto(p.html, sink)
           bytes += p.html.length
           var i = 0
           while (i < hist.length) { hist(i) += r.stateHits(i); i += 1 }
-          // lean production mode: drop full_text (2x output size; offsets in
-          // spans still index it, and main_text == full_text on pages whose
-          // spans are all kept) — schema stays contract-identical
-          Extracted(p.url, p.lang, r.mainText, if (lean) "" else r.text,
-            r.title, r.spans, r.links, r.anchors, r.imgSrcs, r.imgAlts, r.ogProps, r.ogVals, r.metaRobots, r.baseHref, r.canonical, r.declaredLang, r.jsonLd, r.errors, r.spans.length, r.nTokens, r.nTags,
-            r.nErrors, r.truncated, p.html.length.toLong)
+          Extracted.from(p, r)
         }
       }
     }
@@ -278,8 +248,7 @@ object ExtractJob {
       runId: String,
       chunks: Int,
       partitionsPerChunk: Int,
-      maxTaskBytes: Long = Long.MaxValue,
-      lean: Boolean = false
+      maxTaskBytes: Long = Long.MaxValue
   ): Unit = {
     import spark.implicits._
     val lineageDir = s"$outDir/lineage"
@@ -290,7 +259,7 @@ object ExtractJob {
     for (c <- 0 until chunks if !done.contains(c)) {
       val t0 = System.currentTimeMillis()
       val acc = spark.sparkContext.collectionAccumulator[LineageRow](s"lineage-$runId-$c")
-      extractFiles(chunkOf(c), runId, acc, c, maxTaskBytes, lean)
+      extractFiles(chunkOf(c), runId, acc, c, maxTaskBytes)
         .write.mode("overwrite").parquet(s"$outDir/data/chunk=$c")
       val tW = System.currentTimeMillis()
       // Accumulator updates inside transformations are at-least-once (task

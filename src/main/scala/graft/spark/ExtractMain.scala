@@ -46,9 +46,7 @@ object ExtractMain {
       .select("url", "warc_ts", "html", "text", "lang")
     // optional per-task byte cap (north star "per-partition size caps")
     val maxTaskBytes = sys.env.get("SPARK_GRAFT_MAX_TASK_BYTES").map(_.toLong).getOrElse(Long.MaxValue)
-    // SPARK_GRAFT_LEAN=1 drops full_text from the output rows (2x smaller)
-    val lean = sys.env.get("SPARK_GRAFT_LEAN").contains("1")
-    ExtractJob.runChunkedFrom(spark, chunkOf, outDir, runId, chunks, parts, maxTaskBytes, lean)
+    ExtractJob.runChunkedFrom(spark, chunkOf, outDir, runId, chunks, parts, maxTaskBytes)
     // Iceberg-style metadata-only commit: manifest over the chunk files in
     // place; docs/bytes come from the lineage table — no full re-read.
     val cat = new ParquetSnapshotCatalog(outDir)

@@ -272,7 +272,7 @@ object IncrementalIngest {
             (d, c)
           }
           scala.util.Sorting.stableSort(ds)
-          Iterator.range(0, np).map(r => (id, v, "%05d".format(ds(r)._2)))
+          Iterator.range(0, np).map(r => (id, v, AnnIndex.pad(ds(r)._2)))
         }.toDF("qid", "qemb", "qcluster").localCheckpoint()
         val probedClusters = probes.select("qcluster").distinct()
           .as[String].collect().sorted.toSeq

@@ -59,6 +59,12 @@ class AnnIndexSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(Ann.trainRuns.get() == before)
   }
 
+  test("training on an empty input fails with a clear message") {
+    val e = intercept[IllegalArgumentException](
+      AnnIndex.trainModel(AnnIndex.unitVectors(emb.limit(0)), 0L, 0, 8, 16, 3))
+    assert(e.getMessage.contains("empty input"))
+  }
+
   test("append encodes with the FROZEN model: planted twin found, zero retrain, model bytes untouched") {
     val s = spark; import s.implicits._
     val cat = new graft.spark.ParquetSnapshotCatalog(tmp())

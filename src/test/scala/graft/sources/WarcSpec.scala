@@ -158,6 +158,33 @@ class WarcSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(rows2.map(_.url).headOption.contains("https://ok/1"))
   }
 
+  // a record header declaring `len` body bytes; the bytes that follow are
+  // the body, so a parser that does not skip them reads `inner` as records
+  private def oversized(warcType: String, url: String, len: Long, inner: Array[Byte]): Array[Byte] =
+    (s"WARC/1.0\r\nWARC-Type: $warcType\r\nWARC-Target-URI: $url\r\n" +
+      "WARC-Date: 2026-01-01T00:00:00Z\r\nWARC-Refers-To-Target-URI: https://ok/1\r\n" +
+      s"Content-Length: $len\r\n\r\n").getBytes ++ inner
+
+  test("Content-Length beyond Int.MaxValue takes the oversize skip: no row, no exception, earlier records parse") {
+    val good = Warc.record("https://ok/1", 1000L, "first".getBytes)
+    val inner = Warc.record("https://inside/body", 2000L, "body bytes".getBytes)
+    val rows = Warc.parse(good ++ oversized("response", "https://evil/huge", 3L << 30, inner)).toVector
+    assert(rows.map(_.url) == Vector("https://ok/1"))
+  }
+
+  test("revisit reader: an oversized Content-Length is skipped, never read; no row, earlier revisits parse") {
+    def revisit(url: String, ts: Long): Array[Byte] =
+      Warc.recordBlock(url, ts, Array.empty[Byte], warcType = "revisit",
+        extraHeaders = Seq("WARC-Refers-To-Target-URI" -> "https://ok/1"))
+    def urls(bytes: Array[Byte]): Vector[String] =
+      Warc.parseRevisitStream(new java.io.ByteArrayInputStream(bytes)).map(_._1).toVector
+    val inner = revisit("https://inside/body", 3000L)
+    // over the record cap but a valid Int, and over Int.MaxValue
+    for (len <- Seq((300 << 20).toLong, 3L << 30))
+      assert(urls(revisit("https://ok/r", 2000L) ++
+        oversized("revisit", "https://evil/huge", len, inner)) == Vector("https://ok/r"), s"len=$len")
+  }
+
   test("gzip member writer: one deflater, members independently decompressable") {
     val bos = new java.io.ByteArrayOutputStream()
     val w = new Warc.GzipMemberWriter(bos)

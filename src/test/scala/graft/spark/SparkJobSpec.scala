@@ -263,6 +263,73 @@ class SparkJobSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(og.where(size(col("og")) < 1).count() === 0, "og:title missing somewhere")
     assert(og.selectExpr("og[0].prop AS p").where(col("p") =!= "og:title").count() === 0)
     assert(og.where(size(col("og")) === 3).count() > 0, "no page carries the og:image pair")
+
+    // capture parity: every html_<x> of the capture table, unfused and
+    // fused, equals its Extracted field on both typed paths — media pages
+    // plus one non-ASCII/entity page; the NULL-html row is typed-only
+    import graft.functions.{Capture, CollapseHtmlKernelCalls, HtmlExtractAll}
+    import org.apache.spark.sql.Row
+    val ss = spark
+    import ss.implicits._
+    def typedField(capture: String, e: Extracted): Any = capture match {
+      case "main_text" => e.main_text
+      case "text" => e.full_text
+      case "title" => e.title
+      case "lang" => e.declared_lang
+      case "tag_count" => e.n_tags
+      case "links" => e.links
+      case "errors" => e.errors
+      case "jsonld" => e.json_ld
+      case "spans" => e.spans.map(Row.fromTuple)
+      case "og" => e.og_props.zip(e.og_vals).map(Row.fromTuple)
+      case other => fail(s"capture $other has no typed field")
+    }
+    val intl = "<!DOCTYPE html><html LANG=\"ja-JP\"><head><title>Caf&eacute; &amp; 日本語</title>" +
+      "<meta property=\"og:title\" content=\"Crème brûlée\">" +
+      "<script type=\"application/ld+json\">{\"@type\": \"Article\", \"name\": \"Ωmega &amp;\"}</script>" +
+      "</head><body><nav><a href=\"/home\">Home</a></nav>" +
+      "<p>Добро пожаловать &mdash; 東京 &#x1F600 na&iuml;ve caf&eacute; 😀</p>" +
+      "<a href=\"/x?a=1&amp;b=2\">link ü</a><img src=\"/i.png\" alt=\"Bild ä\"><p>tail</p></body></html>"
+    val extra = Seq(
+      PageRow("https://example.com/intl", new java.sql.Timestamp(0L), intl.getBytes("UTF-8"), null, "ja"),
+      PageRow("https://example.com/null", new java.sql.Timestamp(0L), null, null, "en"))
+    val dir = s"${tmp()}/pages"
+    Pages.synthesizeMediaPages(spark, sfDir).union(extra.toDS()).write.parquet(dir)
+    val parity = spark.read.parquet(dir).as[PageRow]
+    parity.createOrReplaceTempView("parity_v")
+    val typed = Seq(ExtractJob.extract(parity, "parity", 2),
+      graft.streaming.ExtractStream.extractStream(parity))
+      .map(_.collect().map(e => e.url -> e).toMap)
+    val n = parity.count()
+    assert(typed(0).size === n && typed(0) == typed(1), "batch and streaming kernels disagree")
+    assert(typed(0)("https://example.com/null").errors == Seq("NULL_HTML"))
+    assert(typed(0)("https://example.com/intl").json_ld.nonEmpty)
+    val calls = Capture.all.map(c => s"${c.sqlName}(html) AS ${c.name}").mkString(", ")
+    def viaSql(fused: Boolean): Unit = {
+      val df = spark.sql(s"SELECT url, $calls FROM parity_v WHERE html IS NOT NULL")
+      val runs = df.queryExecution.optimizedPlan
+        .flatMap(_.expressions.flatMap(_.collect { case a: HtmlExtractAll => a })).size
+      assert(runs === (if (fused) 1 else 0), s"fused=$fused: $runs fused kernel runs")
+      val rows = df.collect()
+      assert(rows.length === n - 1)
+      val bad = for {
+        r <- rows.toSeq; c <- Capture.all
+        want = typedField(c.name, typed(0)(r.getString(0)))
+        if r.getAs[Any](c.name) != want
+      } yield s"fused=$fused ${c.sqlName} ${r.getString(0)}: ${r.getAs[Any](c.name)} != $want"
+      assert(bad.size === 0, bad.take(3).mkString("\n"))
+    }
+    val rules = spark.experimental.extraOptimizations
+    try {
+      spark.experimental.extraOptimizations = rules.filterNot(_ == CollapseHtmlKernelCalls)
+      viaSql(fused = false)
+      graft.functions.HtmlFunctions.registerRule(spark)
+      viaSql(fused = true)
+    } finally spark.experimental.extraOptimizations = rules
+    // html_extract_all keeps its public struct
+    assert(spark.sql("SELECT html_extract_all(html) AS a FROM parity_v").schema("a").dataType
+      .asInstanceOf[org.apache.spark.sql.types.StructType].fieldNames.toSeq ==
+      Seq("main_text", "full_text", "title", "lang", "tag_count", "links", "errors"))
   }
 
   test("file-backed lineage records input files and row ranges") {
