@@ -11,15 +11,6 @@ import org.apache.spark.storage.StorageLevel
   */
 object Bench {
 
-  def mkSession(cpus: String): SparkSession = SparkSession.builder()
-    .master(s"local[$cpus]")
-    .config("spark.sql.shuffle.partitions", cpus)
-    .config("spark.sql.ansi.enabled", "false")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.extensions", "graft.sources.GraftSqlExtensions")
-    .getOrCreate()
-
   /** Timed extraction pass over pre-materialized pages: (docs, bytes, sec). */
   def extractOnce(spark: SparkSession, pages: org.apache.spark.sql.Dataset[graft.spark.PageRow], parts: Int): (Long, Double) = {
     val t0 = System.nanoTime()
@@ -29,13 +20,11 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = GraftSession.defaultCpus
     val variants = sys.env.getOrElse("SPARK_GRAFT_VARIANTS", "100").toInt
-    val spark = mkSession(cpus)
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession(cpus)
 
     // ---- headline: extraction throughput --------------------------------
-    val parts = cpus.toInt
     val pages = graft.spark.Pages.synthesize(spark, sfDir, variants)
       .persist(StorageLevel.MEMORY_AND_DISK)
     val bytes = pages.toDF().selectExpr("sum(length(html))").collect()(0).getLong(0)
@@ -48,8 +37,8 @@ object Bench {
     // contention_spread = slowest/fastest extraction pass, so a cross-round
     // reader can discount a contended window instead of reading a phantom
     // regression.
-    extractOnce(spark, pages, parts)
-    val extractPasses = (1 to 3).map(_ => extractOnce(spark, pages, parts))
+    extractOnce(spark, pages, cpus)
+    val extractPasses = (1 to 3).map(_ => extractOnce(spark, pages, cpus))
     val (docs, sec) = extractPasses.minBy(_._2)
     val spread = extractPasses.map(_._2).max / sec
     pages.unpersist()
@@ -105,8 +94,7 @@ object Scale {
     val variants = sys.env.getOrElse("SPARK_GRAFT_VARIANTS", "100").toInt
 
     def measure(cpus: Int): (Long, Double, Double) = {
-      val spark = Bench.mkSession(cpus.toString)
-      spark.sparkContext.setLogLevel("ERROR")
+      val spark = GraftSession(cpus)
       val pages = graft.spark.Pages.synthesize(spark, sfDir, variants)
         .persist(StorageLevel.MEMORY_AND_DISK)
       val bytes = pages.toDF().selectExpr("sum(length(html))").collect()(0).getLong(0)

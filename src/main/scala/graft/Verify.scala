@@ -1,23 +1,20 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
-/** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+/** Correctness dump: each SparkEntry.queries result → parquet, plus
+  * oracle_sql.json, for the DuckDB oracle compare (tools/check_oracle.py).
+  *
+  *   Verify <sfDir> <outDir> [query ...]
+  *
+  * Trailing query names restrict the dump (and oracle_sql.json) to those
+  * queries — the fast loop while iterating on one operator.
+  */
 object Verify {
   def main(args: Array[String]): Unit = {
-    val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.ansi.enabled", "false") // minhash uses wrapping 64-bit arithmetic
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.sources.GraftSqlExtensions")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val sfDir = args(0); val outDir = args(1); val only = args.drop(2).toSet
+    def wanted(name: String) = only.isEmpty || only(name)
+    val spark = GraftSession()
     new java.io.File(outDir).mkdirs()
-    SparkEntry.queries.foreach { case (name, fn) =>
+    SparkEntry.queries.filter(kv => wanted(kv._1)).foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>
@@ -36,7 +33,7 @@ object Verify {
       case c if c < ' ' => f"\\u${c.toInt}%04x"
       case c => c.toString
     } + "\""
-    val json = SparkEntry.oracleSql
+    val json = SparkEntry.oracleSql.filter(kv => wanted(kv._1))
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()

@@ -324,16 +324,26 @@ object Media {
     def be64(i: Int): Long = (be32(i) << 32) | be32(i + 4)
     def fourcc(i: Int) = new String(b, i + 4, 4, "US-ASCII")
     if (b.length < 16 || fourcc(0) != "ftyp") return None
-    // walk top-level boxes to moov — LONG cursor: a crafted 32-bit box
-    // size must not wrap negative and loop/index out of bounds in a task
+    // (size, header length) of the box at j inside [j, end): size 1 is a
+    // 64-bit largesize after the fourcc (16-byte header), size 0 runs to
+    // `end`; a size below its header length is corrupt
+    def box(j: Long, end: Int): (Long, Int) = be32(j.toInt) match {
+      case 0L => (end - j, 8)
+      case 1L => if (j + 16 <= end) (be64(j.toInt + 8), 16) else (-1L, 16)
+      case size => (size, 8)
+    }
+    // walk top-level boxes to moov — LONG cursor, and every step clamped to
+    // the buffer: a crafted 32- or 64-bit box size must not wrap negative
+    // and loop/index out of bounds in a task
     var i = 0L
     var moov = -1
     var moovEnd = -1
     while (i + 8 <= b.length && moov < 0) {
-      val size = be32(i.toInt)
-      if (size < 8) return None
-      if (fourcc(i.toInt) == "moov") { moov = (i + 8).toInt; moovEnd = math.min(b.length.toLong, i + size).toInt }
-      i += size
+      val (size, hdr) = box(i, b.length)
+      if (size < hdr) return None
+      val end = i + math.min(size, b.length - i)
+      if (fourcc(i.toInt) == "moov") { moov = (i + hdr).toInt; moovEnd = end.toInt }
+      i = end
     }
     if (moov < 0) return None
     var timescale = 0L
@@ -343,15 +353,16 @@ object Media {
     def walk(from: Int, to: Int): Unit = {
       var j = from.toLong
       while (j + 8 <= to) {
-        val size = be32(j.toInt)
-        if (size < 8) return
+        val (size, hdr) = box(j, to)
+        if (size < hdr) return
+        val end = j + math.min(size, to - j)
         val t = fourcc(j.toInt)
-        val p = (j + 8).toInt
+        val p = (j + hdr).toInt
         t match {
           case "mvhd" if p + 4 <= to =>
             if (u8(p) == 1) { if (p + 32 <= to) { timescale = be32(p + 20); duration = be64(p + 24) } }
             else if (p + 20 <= to) { timescale = be32(p + 12); duration = be32(p + 16) }
-          case "trak" => walk(p, math.min(to.toLong, j + size).toInt)
+          case "trak" => walk(p, end.toInt)
           case "tkhd" if w == 0 =>
             val (wo, ho) = if (u8(p) == 1) (88, 92) else (76, 80)
             if (p + ho + 4 <= to) {
@@ -361,7 +372,7 @@ object Media {
             }
           case _ => ()
         }
-        j += size
+        j = end
       }
     }
     walk(moov, moovEnd)

@@ -1,6 +1,7 @@
 package graft.spark
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.GraftSession
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.streaming.Trigger
 
 /** Catalog-to-catalog CDC replication — the spark-submit surface composing
@@ -26,13 +27,7 @@ object CatalogMirrorMain {
     val workDir = args(1)
     val nDrops = if (args.length > 2) args(2).toInt else 3
 
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession()
 
     val cat = new ParquetSnapshotCatalog(workDir)
     val cp = s"$workDir/_mirror_checkpoint"

@@ -1,5 +1,6 @@
 package graft.spark
 
+import graft.GraftSession
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.sources.Warc
@@ -41,14 +42,7 @@ object CurateMain {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.length > 0) args(0) else "/root/testdata/sf0.001"
     val outDir = if (args.length > 1) args(1) else "/tmp/graft_curate"
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-      .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_CPUS", "8"))
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession()
     val report = run(spark, sfDir, outDir)
     println(report)
     spark.stop()

@@ -1,6 +1,6 @@
 package graft.spark
 
-import org.apache.spark.sql.SparkSession
+import graft.GraftSession
 
 /** The production job entrypoint (spark-submit target):
   *
@@ -21,14 +21,8 @@ object ExtractMain {
     val chunks = if (args.length > 3) args(3).toInt else 4
     val parts = if (args.length > 4) args(4).toInt else 32
     val variants = if (args.length > 5) args(5).toInt else 1
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]"))
-      .config("spark.sql.shuffle.partitions", parts.toString)
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession()
+    spark.conf.set("spark.sql.shuffle.partitions", parts.toLong)
     val t0 = System.currentTimeMillis()
     // Materialize the pages table ONCE, hash-partitioned by chunk, so each
     // resume chunk reads only its own partition directory (partition

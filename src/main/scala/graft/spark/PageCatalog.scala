@@ -27,8 +27,8 @@ import java.nio.charset.StandardCharsets.UTF_8
   * list entries are one of:
   *   `@m<N>.json`        delta-manifest ref (expanded to its file list)
   *   `!d<N>.<col>.tsv`   equality-delete ref (applied as an anti-join)
-  *   anything else       a raw data-file path (legacy flat manifests keep
-  *                       reading — migration is implicit)
+  *   `!p…` / `!x…`       positional-delete / deletion-vector ref
+  * Any other entry is corrupt metadata and every read refuses it.
   *
   * ALL metadata I/O goes through `org.apache.hadoop.fs.FileSystem`, so any
   * Hadoop-addressable store (hdfs://, s3a://, file:/) works. The ONLY two
@@ -205,40 +205,46 @@ class ParquetSnapshotCatalog(root: String) extends PageCatalog {
       .stripPrefix("\"").stripSuffix(",").stripSuffix("\""))
       .filter(_.nonEmpty).toSeq
 
-  /** Raw manifest-list entries of a snapshot (refs + legacy paths). */
-  private def entriesOf(table: String, snap: Long): Seq[String] =
-    parseJsonArray(readStr(new HPath(manifestDir(table), s"v$snap.json")))
+  /** Manifest-list entries of a snapshot: `@` manifest refs and `!` delete
+    * refs — the only two kinds any commit writes. */
+  private def entriesOf(table: String, snap: Long): Seq[String] = {
+    val entries = parseJsonArray(readStr(new HPath(manifestDir(table), s"v$snap.json")))
+    entries.find(e => !e.startsWith("@") && !e.startsWith("!")).foreach { e =>
+      throw new IllegalStateException(
+        s"manifest list of '$table' snapshot $snap has an entry that is neither " +
+        s"an @ manifest ref nor a ! delete ref: $e")
+    }
+    entries
+  }
 
   /** The snapshot's data-file list: manifest-list entries with `@` refs
-    * expanded, `!` delete refs skipped, legacy raw paths passed through.
-    * `.distinct` makes a double-committed delta (zombie-writer replay of a
-    * streaming batch) harmless: the same file can never be scanned twice.
+    * expanded, `!` delete refs skipped. `.distinct` makes a double-committed
+    * delta (zombie-writer replay of a streaming batch) harmless: the same
+    * file can never be scanned twice.
     */
   protected def manifestFiles(table: String, snap: Long): Seq[String] =
-    entriesOf(table, snap).flatMap { e =>
-      if (e.startsWith("@")) parseJsonArray(readStr(new HPath(manifestDir(table), e.stripPrefix("@"))))
-      else if (e.startsWith("!")) Nil
-      else Seq(e)
-    }.distinct
+    entriesOf(table, snap).flatMap(addedFiles(table, _)).map(_._1).distinct
 
   private def deleteRefsOf(table: String, snap: Long): Seq[String] =
     entriesOf(table, snap).filter(_.startsWith("!")).map(_.stripPrefix("!"))
 
   /** The snapshot's (data file, add order) pairs — a file's add order is its
-    * delta manifest's snapshot id (m<K>.json → K); legacy raw-path entries
-    * predate ordering and get 0, so every delete applies to them. This is
-    * the planning surface the DSv2 streaming source shares with
-    * [[readWithDeletes]]: add order is what decides which equality deletes
-    * apply to which file (the Iceberg sequence-number rule).
+    * delta manifest's snapshot id (m<K>.json → K). This is the planning
+    * surface the DSv2 streaming source shares with [[readWithDeletes]]: add
+    * order is what decides which equality deletes apply to which file (the
+    * Iceberg sequence-number rule).
     */
   def filesWithAddOrder(table: String, snap: Long): Seq[(String, Long)] =
-    entriesOf(table, snap).flatMap { e =>
-      if (e.startsWith("@")) {
-        val k = addOrderOfId(e.stripPrefix("@m").stripSuffix(".json"))
-        parseJsonArray(readStr(new HPath(manifestDir(table), e.stripPrefix("@")))).map(_ -> k)
-      } else if (e.startsWith("!")) Nil
-      else Seq(e -> 0L)
-    }.distinctBy(_._1)
+    entriesOf(table, snap).flatMap(addedFiles(table, _)).distinctBy(_._1)
+
+  /** One manifest-list entry's (data file, add order) pairs: a `@` ref
+    * expands to its delta manifest's files, a `!` delete ref adds none. */
+  private def addedFiles(table: String, entry: String): Seq[(String, Long)] =
+    if (entry.startsWith("!")) Nil
+    else {
+      val k = addOrderOfId(entry.stripPrefix("@m").stripSuffix(".json"))
+      parseJsonArray(readStr(new HPath(manifestDir(table), entry.stripPrefix("@")))).map(_ -> k)
+    }
 
   /** Effective add order of a manifest id: `m<K>.json` → K;
     * a consolidated manifest `m<K>-<snap>.json` (see [[rewriteManifests]])
@@ -267,20 +273,9 @@ class ParquetSnapshotCatalog(root: String) extends PageCatalog {
         s"incremental window ($fromSnap, $toSnap] of '$table' crosses a rewrite " +
         s"(compaction/expire/rollback) — ${gone.size} entries of $fromSnap are gone; " +
         "read the full snapshot instead")
-    val newPairs = toEntries.filterNot(fromEntries).flatMap { e =>
-      if (e.startsWith("@")) {
-        val k = addOrderOfId(e.stripPrefix("@m").stripSuffix(".json"))
-        parseJsonArray(readStr(new HPath(manifestDir(table), e.stripPrefix("@")))).map(_ -> k)
-      } else if (e.startsWith("!")) Nil
-      else Seq(e -> 0L)
-    }.distinctBy(_._1)
-    // two-level tables need no cross-check (delta-manifest file paths are
-    // snapshot-addressed, so a file cannot appear under two entries); only
-    // legacy flat manifests — raw paths in the entry list — can overlap,
-    // and only they pay the O(table) expansion of `fromSnap`
-    if (fromEntries.exists(e => !e.startsWith("@") && !e.startsWith("!")))
-      newPairs.filterNot(p => manifestFiles(table, fromSnap).toSet(p._1))
-    else newPairs
+    // no cross-check against `fromSnap`'s files: delta-manifest file paths
+    // are snapshot-addressed, so a file cannot appear under two entries
+    toEntries.filterNot(fromEntries).flatMap(addedFiles(table, _)).distinctBy(_._1)
   }
 
   /** The snapshot's equality deletes as (delete snapshot, column, keys),
@@ -1103,8 +1098,7 @@ class ParquetSnapshotCatalog(root: String) extends PageCatalog {
     * ADDED at snapshots BEFORE D — rows appended after a takedown are new
     * facts, never resurrections of deleted ones, which is what makes
     * [[upsertByKey]]'s delete-then-append correct. A file's add order is
-    * its delta manifest's snapshot id (m<K>.json); legacy raw-path entries
-    * predate the delete feature and get every delete (the old behavior).
+    * its delta manifest's snapshot id (m<K>.json).
     *
     * Plan shape: files group by HOW MANY deletes precede them — the
     * applicable deletes are always a suffix of the snapshot's delete list,
@@ -1339,9 +1333,7 @@ class ParquetSnapshotCatalog(root: String) extends PageCatalog {
         val dir = manifestDir(table)
         val newEntries = entriesOf(table, snap).flatMap { e =>
           if (e.startsWith("!")) Some(e) // tombstones pass through
-          else if (!e.startsWith("@")) { // legacy raw-path entry
-            if (rewriteSet(e)) None else Some(e)
-          } else {
+          else {
             val id = e.stripPrefix("@m").stripSuffix(".json")
             val listed = parseJsonArray(readStr(new HPath(dir, s"m$id.json")))
             val kept = listed.filterNot(rewriteSet)
@@ -1463,11 +1455,6 @@ class ParquetSnapshotCatalog(root: String) extends PageCatalog {
       s"compactZOrder on '$table': need 2..4 columns, got ${cols.size}")
     require(bitsPerCol >= 1 && bitsPerCol * cols.size <= 60,
       s"compactZOrder on '$table': ${bitsPerCol * cols.size} interleaved bits exceed a long")
-    def zdbg[A](l: String)(f: => A): A = {
-      val t0 = System.nanoTime(); val r = f
-      if (sys.env.contains("GRAFT_ZDBG")) println(f"ZDBG $l ${(System.nanoTime()-t0)/1e9}%.2f s")
-      r
-    }
     val snap = currentSnapshot(table).getOrElse(
       throw new IllegalStateException(s"no committed snapshot for $table"))
     val bloomCols = bloomColumnsAt(table, snap)
@@ -1482,7 +1469,7 @@ class ParquetSnapshotCatalog(root: String) extends PageCatalog {
     // boundaries are MBs at most and ride into the bucket expression as
     // literals (driver state, not a shuffle)
     val bounds: Seq[Array[Double]] =
-      zdbg("quantiles")(cur.stat.approxQuantile(cols.toArray, probs, 0.001)).toSeq
+      cur.stat.approxQuantile(cols.toArray, probs, 0.001).toSeq
     cols.zip(bounds).foreach { case (c, b) =>
       require(b.nonEmpty, s"compactZOrder: no quantiles for '$c' (all null?)")
     }
@@ -1542,16 +1529,15 @@ class ParquetSnapshotCatalog(root: String) extends PageCatalog {
     val shift =
       if (shift0 == 0) 0
       else if (totalBits <= 20) {
-        val zv = zdbg("distinct-zv")(
-          withZv.select(col("_zv")).distinct().collect().map(_.getLong(0)))
+        val zv = withZv.select(col("_zv")).distinct().collect().map(_.getLong(0))
         candShifts.collectFirst {
           case s if zv.iterator.map(_ >> s).toSet.size >= n => s
         }.getOrElse(0)
       } else {
-        val row = zdbg("acd")(withZv.agg(
+        val row = withZv.agg(
           approx_count_distinct(expr(s"shiftright(_zv, ${candShifts.head})")).as("d0"),
           candShifts.tail.map(s =>
-            approx_count_distinct(expr(s"shiftright(_zv, $s)")).as(s"d$s")): _*).head())
+            approx_count_distinct(expr(s"shiftright(_zv, $s)")).as(s"d$s")): _*).head()
         candShifts.zipWithIndex.collectFirst {
           case (s, i) if row.getLong(i) >= n => s
         }.getOrElse(0)
@@ -1561,10 +1547,10 @@ class ParquetSnapshotCatalog(root: String) extends PageCatalog {
     val clustered = withZ.repartitionByRange(n, col("_zf"))
       .sortWithinPartitions("_zv")
       .drop(helper: _*)
-    val newSnap = zdbg("commit")(commit(clustered, table))
+    val newSnap = commit(clustered, table)
     val files = manifestFiles(table, newSnap)
-    zdbg("stats")(writeStr(new HPath(manifestDir(table), s"m$newSnap.stats.tsv"),
-      statsTsv(spark, files, cols.map(c => (c, s"`$c`")))))
+    writeStr(new HPath(manifestDir(table), s"m$newSnap.stats.tsv"),
+      statsTsv(spark, files, cols.map(c => (c, s"`$c`"))))
     bloomCols.foreach { c =>
       writeStr(new HPath(manifestDir(table), s"m$newSnap.bloom.$c.tsv"),
         bloomTsv(spark, files, c, bloomBits(c)))
@@ -1871,12 +1857,12 @@ class ParquetSnapshotCatalog(root: String) extends PageCatalog {
     * count. Data files untouched; stats/bloom sidecars merge by
     * concatenation under the consolidated id (files without coverage stay
     * uncovered — pruning keeps them conservatively, same as pre-rewrite);
-    * tombstones and legacy raw-path entries pass through; older snapshots
-    * keep their original manifests (time travel intact) until expired,
-    * when ref-counted GC collects the superseded deltas and their
-    * sidecars. Incremental windows crossing the rewrite refuse, like
-    * compaction. Returns the new snapshot id, or the current one when no
-    * group has two manifests to merge.
+    * tombstones pass through; older snapshots keep their original
+    * manifests (time travel intact) until expired, when ref-counted GC
+    * collects the superseded deltas and their sidecars. Incremental
+    * windows crossing the rewrite refuse, like compaction. Returns the new
+    * snapshot id, or the current one when no group has two manifests to
+    * merge.
     */
   def rewriteManifests(table: String): Long = withCommitLock(table) {
     val cur = currentSnapshot(table).getOrElse(
@@ -1947,11 +1933,9 @@ class ParquetSnapshotCatalog(root: String) extends PageCatalog {
     expired.flatMap(s => manifestFiles(table, s)).distinct
       .filterNot(liveFiles)
       .foreach(f => fsDelete(new HPath(f)))
-    val liveRefs = keep.flatMap(s => entriesOf(table, s)).filter(e =>
-      e.startsWith("@") || e.startsWith("!"))
+    val liveRefs = keep.flatMap(s => entriesOf(table, s))
     val allNames = listNames(manifestDir(table))
     expired.flatMap(s => entriesOf(table, s)).distinct
-      .filter(e => e.startsWith("@") || e.startsWith("!"))
       .filterNot(liveRefs)
       .foreach { e =>
         fsDelete(new HPath(manifestDir(table), e.drop(1)))
@@ -1963,19 +1947,13 @@ class ParquetSnapshotCatalog(root: String) extends PageCatalog {
             .foreach(n => fsDelete(new HPath(manifestDir(table), n)))
         }
       }
-    expired.foreach { s =>
-      fsDelete(new HPath(manifestDir(table), s"v$s.json"))
-      // legacy whole-table sidecars are snapshot-keyed — expire with it
-      allNames.filter(n => n == s"v$s.stats.tsv" ||
-          (n.startsWith(s"v$s.bloom.") && n.endsWith(".tsv")))
-        .foreach(n => fsDelete(new HPath(manifestDir(table), n)))
-    }
+    expired.foreach(s => fsDelete(new HPath(manifestDir(table), s"v$s.json")))
     expired
   }
 
   /** Commit + per-FILE column stats (Iceberg manifest zone maps): after the
     * data lands, one aggregation pass keyed by `input_file_name()` records
-    * (min, max) per stats column per file into a `v<N>.stats.tsv` sidecar.
+    * (min, max) per stats column per file into an `m<N>.stats.tsv` sidecar.
     * O(files) rows reach the driver — never data. At 100 TB these zone maps
     * are what lets a warc_ts- or doc_id-ranged query open 0.1% of the
     * files instead of all of them (the writer-side stats Iceberg collects
@@ -1990,26 +1968,24 @@ class ParquetSnapshotCatalog(root: String) extends PageCatalog {
     snap
   }
 
-  /** All per-file stats lines visible at `snap`: the snapshot's legacy
-    * whole-table `v<N>.stats.tsv` (pre-two-level tables keep reading) plus
-    * every delta manifest's OWN `m<K>.stats.tsv` — the sidecar mirror of
-    * the two-level manifest metadata. An append writes O(delta) stats
-    * bytes; the old carry-forward copy was O(table) per append, i.e.
-    * O(drops²) cumulative — the same quadratic-metadata shape the round-3
-    * manifest fix killed, eliminated here the same way.
+  /** All per-file stats lines visible at `snap`: every delta manifest's OWN
+    * `m<K>.stats.tsv` — the sidecar mirror of the two-level manifest
+    * metadata. An append writes O(delta) stats bytes; the old carry-forward
+    * copy was O(table) per append, i.e. O(drops²) cumulative — the same
+    * quadratic-metadata shape the round-3 manifest fix killed, eliminated
+    * here the same way.
     */
-  private def statsLinesAt(table: String, snap: Long): Seq[Array[String]] = {
+  private def statsLinesAt(table: String, snap: Long): Seq[Array[String]] =
+    sidecarLinesAt(table, snap, ".stats.tsv")
+
+  /** The `m<K><suffix>` sidecar lines of every delta manifest in `snap`. */
+  private def sidecarLinesAt(table: String, snap: Long, suffix: String): Seq[Array[String]] = {
     val dir = manifestDir(table)
-    val legacy = {
-      val p = new HPath(dir, s"v$snap.stats.tsv")
-      if (fsExists(p)) Seq(readStr(p)) else Nil
-    }
-    val deltas = entriesOf(table, snap).filter(_.startsWith("@")).flatMap { e =>
+    entriesOf(table, snap).filter(_.startsWith("@")).flatMap { e =>
       val k = e.stripPrefix("@m").stripSuffix(".json")
-      val p = new HPath(dir, s"m$k.stats.tsv")
+      val p = new HPath(dir, s"m$k$suffix")
       if (fsExists(p)) Some(readStr(p)) else None
-    }
-    (legacy ++ deltas).flatMap(_.split('\n')).filter(_.nonEmpty).map(_.split('\t'))
+    }.flatMap(_.split('\n')).filter(_.nonEmpty).map(_.split('\t'))
   }
 
   /** Columns the DSv2 scan can prune FILES on at runtime (dynamic file
@@ -2028,34 +2004,20 @@ class ParquetSnapshotCatalog(root: String) extends PageCatalog {
   }
 
   /** [[statsLinesAt]] for bloom sidecars of one column. */
-  private def bloomLinesAt(table: String, snap: Long, col: String): Seq[Array[String]] = {
-    val dir = manifestDir(table)
-    val legacy = {
-      val p = new HPath(dir, s"v$snap.bloom.$col.tsv")
-      if (fsExists(p)) Seq(readStr(p)) else Nil
-    }
-    val deltas = entriesOf(table, snap).filter(_.startsWith("@")).flatMap { e =>
-      val k = e.stripPrefix("@m").stripSuffix(".json")
-      val p = new HPath(dir, s"m$k.bloom.$col.tsv")
-      if (fsExists(p)) Some(readStr(p)) else None
-    }
-    (legacy ++ deltas).flatMap(_.split('\n')).filter(_.nonEmpty).map(_.split('\t'))
-  }
+  private def bloomLinesAt(table: String, snap: Long, col: String): Seq[Array[String]] =
+    sidecarLinesAt(table, snap, s".bloom.$col.tsv")
 
-  /** Columns with a bloom sidecar anywhere in `snap`'s metadata. */
+  /** Columns with a bloom sidecar on any delta manifest of `snap`. */
   private def bloomColumnsAt(table: String, snap: Long): Seq[String] = {
-    val names = listNames(manifestDir(table))
-    val legacy = names.filter(n => n.startsWith(s"v$snap.bloom.") && n.endsWith(".tsv"))
-      .map(_.stripPrefix(s"v$snap.bloom.").stripSuffix(".tsv"))
     val deltaIds = entriesOf(table, snap).filter(_.startsWith("@"))
       .map(_.stripPrefix("@m").stripSuffix(".json")).toSet
-    val deltas = names.filter(n => n.startsWith("m") && n.contains(".bloom.") && n.endsWith(".tsv"))
+    listNames(manifestDir(table))
+      .filter(n => n.startsWith("m") && n.contains(".bloom.") && n.endsWith(".tsv"))
       .flatMap { n =>
         val id = n.substring(1, n.indexOf(".bloom."))
         if (deltaIds(id)) Some(n.substring(n.indexOf(".bloom.") + 7).stripSuffix(".tsv"))
         else None
-      }
-    (legacy ++ deltas).distinct
+      }.distinct
   }
 
   /** Per-file (min, max) stats TSV body for `files` — one aggregation pass
@@ -2467,7 +2429,7 @@ class ParquetSnapshotCatalog(root: String) extends PageCatalog {
 
   /** Metadata-only aggregation (Iceberg's manifest-stats answer path):
     * global (min, max, count) of `column` for the CURRENT snapshot computed
-    * purely from the `v<N>.stats.tsv` sidecar — O(files) driver work, ZERO
+    * purely from the `m<K>.stats.tsv` sidecars — O(files) driver work, ZERO
     * data files opened. At 100 TB this turns `SELECT min(ts), max(ts),
     * count(*)` — the first query every pipeline dashboard runs — from a
     * full scan into a metadata lookup.

@@ -150,6 +150,32 @@ class MediaSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(Media.videoHeader(noTkhd) == None)
   }
 
+  // ISO 14496-12 §4.2 box sizes beyond the plain 32-bit form: size 1 = a
+  // 64-bit largesize follows the fourcc, size 0 = the box runs to the end
+  private def be32(v: Long) = Array[Byte](((v >> 24) & 0xff).toByte,
+    ((v >> 16) & 0xff).toByte, ((v >> 8) & 0xff).toByte, (v & 0xff).toByte)
+  private def be64(v: Long) = be32(v >>> 32) ++ be32(v & 0xffffffffL)
+  private val mp4 = Media.mp4Header(1920, 1080, 90500L, v1 = false)
+  private val (ftyp, moov) = mp4.splitAt(28)
+  private def largeMdat(largesize: Long, payload: Int) =
+    be32(1) ++ "mdat".getBytes("US-ASCII") ++ be64(largesize) ++ new Array[Byte](payload)
+
+  test("video: an mdat with a 64-bit largesize ahead of moov decodes") {
+    assert(Media.videoHeader(ftyp ++ largeMdat(16 + 40, 40) ++ moov) ==
+      Some(("mp4", 1920, 1080, 90500L)))
+  }
+
+  test("video: a size-0 moov as the last box runs to the end and decodes") {
+    assert(Media.videoHeader(ftyp ++ be32(0) ++ moov.drop(4)) ==
+      Some(("mp4", 1920, 1080, 90500L)))
+  }
+
+  test("video: a largesize of 2^63-1 and sizes 2-7 return None without throwing") {
+    assert(Media.videoHeader(ftyp ++ largeMdat(Long.MaxValue, 40) ++ moov) == None)
+    assert(Media.videoHeader(ftyp ++ largeMdat(Long.MinValue, 40) ++ moov) == None)
+    assert(Media.videoHeader(ftyp ++ be32(5) ++ "free".getBytes("US-ASCII") ++ moov) == None)
+  }
+
   test("adversarial sizes: crafted 32-bit chunk/box lengths cannot wrap the cursor or throw") {
     // WAV whose chunk size is 0x7FFFFFF0 (positive as an Int, but adding
     // it wraps an Int cursor negative → out-of-bounds index in a task)

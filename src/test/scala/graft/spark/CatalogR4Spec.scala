@@ -132,6 +132,21 @@ class CatalogR4Spec extends AnyFunSuite with BeforeAndAfterAll {
     assert(cat.read(spark, "t").count() === 2, "duplicated file refs must scan once")
   }
 
+  test("a manifest-list entry that is neither an @ ref nor a ! ref is refused, never read as a data file") {
+    val root = tmp()
+    val cat = new ParquetSnapshotCatalog(root)
+    val ss = spark; import ss.implicits._
+    val snap = cat.commit(Seq((1, "x")).toDF("id", "s"), "t")
+    val file = cat.filesWithAddOrder("t", snap).head._1
+    // the pre-two-level flat shape: a raw data-file path in the list
+    Files.writeString(Paths.get(root, "t", "_manifests", s"v$snap.json"),
+      "[\n\"@m" + snap + ".json\",\n\"" + file + "\"\n]")
+    val e = intercept[IllegalStateException](cat.read(spark, "t"))
+    assert(e.getMessage.contains("'t'") && e.getMessage.contains(s"snapshot $snap") &&
+      e.getMessage.contains(file), e.getMessage)
+    intercept[IllegalStateException](cat.filesWithAddOrder("t", snap))
+  }
+
   test("claim GC: commits leave no .claim-v files behind") {
     val root = tmp()
     val cat = new ParquetSnapshotCatalog(root)
