@@ -1680,20 +1680,30 @@ final class RefTokenizer(
     doReturnState(true)
   }
 
+  /** One numeric-reference digit. Fidelity mode accumulates base 16 in
+    * both states (Q4); SPEC-FIX (extract mode): `base` is honoured and the
+    * code saturates just past U+10FFFF, so a long digit run ends as U+FFFD
+    * instead of a wrapped Int.
+    */
+  private def addDigit(base: Int, d: Int): Unit =
+    charRefCode = if (specMode) math.min(charRefCode * base + d, 0x110000) else charRefCode * 16 + d
+
   /** 13.2.5.78 (:2853-2887) — Q5: the `;` branch has no `return`: after the
     * inner num_char_reference_end subtree fully unwinds, a spurious
     * missing_semicolon error and a SECOND num_char_reference_end (reconsumed)
-    * still run. Modeled as an explicit continuation.
+    * still run. Modeled as an explicit continuation. SPEC-FIX (extract
+    * mode): `;` ends the reference once.
     */
   private def stHexCharReference(): Unit = {
     val c = nextCp()
     if (c < 0) { parseError("missing_semicolon_after_char_reference"); gotoR(NumCharReferenceEnd); return }
     currChar = c
-    if (isDec(c)) { charRefCode = charRefCode * 16 + (c - 0x30); goto(HexCharReference); return }
-    if (c >= 'A' && c <= 'F') { charRefCode = charRefCode * 16 + (c - 0x37); goto(HexCharReference); return }
-    if (c >= 'a' && c <= 'f') { charRefCode = charRefCode * 16 + (c - 0x57); goto(HexCharReference); return }
+    if (isDec(c)) { addDigit(16, c - 0x30); goto(HexCharReference); return }
+    if (c >= 'A' && c <= 'F') { addDigit(16, c - 0x37); goto(HexCharReference); return }
+    if (c >= 'a' && c <= 'f') { addDigit(16, c - 0x57); goto(HexCharReference); return }
     if (c == ';') {
-      pending = (() => { parseError("missing_semicolon_after_char_reference"); gotoR(NumCharReferenceEnd) }) :: pending
+      if (!specMode)
+        pending = (() => { parseError("missing_semicolon_after_char_reference"); gotoR(NumCharReferenceEnd) }) :: pending
       goto(NumCharReferenceEnd)
       return
     }
@@ -1702,13 +1712,13 @@ final class RefTokenizer(
   }
 
   /** 13.2.5.79 (:2890-2911) — Q4: accumulates base-16 with DECIMAL digits:
-    * `&#65;` → U+0065.
+    * `&#65;` → U+0065 (fidelity mode; extract mode is base 10).
     */
   private def stDecimalCharReference(): Unit = {
     val c = nextCp()
     if (c < 0) { parseError("missing_semicolon_after_char_reference"); gotoR(NumCharReferenceEnd); return }
     currChar = c
-    if (isDec(c)) { charRefCode = charRefCode * 16 + (c - 0x30); goto(DecimalCharReference); return } // Q4
+    if (isDec(c)) { addDigit(10, c - 0x30); goto(DecimalCharReference); return } // Q4
     if (c == ';') { goto(NumCharReferenceEnd); return }
     parseError("missing_semicolon_after_char_reference")
     gotoR(NumCharReferenceEnd)

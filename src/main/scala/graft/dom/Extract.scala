@@ -1795,16 +1795,18 @@ final class ExtractSink extends TokenSink {
 }
 
 /** Per-document extraction entry point: html bytes → extracted text + spans.
-  * This is the single-node "oracle"; the Spark kernel calls exactly this per
-  * row, so Spark(k partitions) ≡ oracle by construction.
+  * This is the single-node "oracle"; the Spark kernel calls [[extractInto]]
+  * per row and [[extract]] is that same call with a fresh sink, so
+  * Spark(k partitions) ≡ oracle by construction.
   */
 object Extractor {
-  /** Extract mode (production): spec tree-feedback tokenizer. */
-  def extract(html: Array[Byte]): ExtractResult = extractCps(RefTokenizer.decodeUtf8(html))
+  /** Extract mode (production): spec tree-feedback tokenizer over the
+    * kernel's byte entry (BOM strip, charset sniff, byte mode for ASCII).
+    */
+  def extract(html: Array[Byte]): ExtractResult = extractInto(html, new ExtractSink)
 
-  def extractString(html: String): ExtractResult = extractCps(RefTokenizer.codepoints(html))
-
-  def extractCps(cps: Array[Int]): ExtractResult = extractCpsInto(cps, new ExtractSink)
+  def extractString(html: String): ExtractResult =
+    extractCpsInto(RefTokenizer.codepoints(html), new ExtractSink)
 
   /** Kernel entry with a caller-owned (reusable) sink: resets it, runs the
     * tokenizer, finalizes. One sink per partition → per-row allocations drop
@@ -1812,14 +1814,7 @@ object Extractor {
     */
   def extractCpsInto(cps: Array[Int], sink: ExtractSink): ExtractResult = {
     sink.reset()
-    val tk = new RefTokenizer(cps, sink, specMode = true)
-    var truncated = false
-    try tk.run()
-    catch {
-      case _: StepBudgetExceeded => truncated = true; sink.errors += "STEP_BUDGET_EXCEEDED"
-      case _: VCastPanic => truncated = true; sink.errors += "V_CAST_PANIC"
-    }
-    sink.result(truncated, tk.stateHits)
+    runGuarded(new RefTokenizer(cps, sink, specMode = true), sink)
   }
 
   /** Reusable variant of `extract` for per-partition loops: both the decode
@@ -1881,13 +1876,7 @@ object Extractor {
     */
   def fidelityText(html: Array[Byte]): (String, Boolean) = {
     val sink = new CollectingSink
-    val tk = new RefTokenizer(RefTokenizer.decodeUtf8(html), sink, specMode = false)
-    var truncated = false
-    try tk.run()
-    catch {
-      case _: StepBudgetExceeded => truncated = true
-      case _: VCastPanic => truncated = true
-    }
+    val truncated = fidelityInto(html, sink)
     (sink.charText, truncated)
   }
 

@@ -1,25 +1,23 @@
 package graft.sources
 
-import org.apache.spark.sql.{Dataset, SparkSession}
+import org.apache.spark.sql.{Dataset, Encoder, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.spark.PageRow
 import java.nio.charset.StandardCharsets.UTF_8
 
 /** WARC/1.0 source + sink — Common Crawl's native container format, so the
-  * engine can ingest real crawl archives without a conversion step.
+  * engine can ingest real crawl archives without a conversion step. Each
+  * job is done one way:
   *
-  * Read path: `binaryFile` datasource (one task per archive file — exactly
-  * how production Common-Crawl jobs parallelize, since WARC members are
-  * gzip-concatenated per file and not arbitrarily splittable; CC files are
-  * ~1 GB, well under the datasource's 2 GB ceiling) → STREAMING per-file
-  * record parse (executor memory stays O(record), never O(inflated file)):
+  * One record scanner (`RecordScanner`): the page, WET, WAT and revisit
+  * readers and the random-access fetch are projections over one header
+  * loop and body read:
   *
-  *   - plain `.warc` and gzipped `.warc.gz` both supported; the CC layout
-  *     (each record its own gzip member, members concatenated) decompresses
-  *     transparently through `GZIPInputStream`, which continues across
-  *     member boundaries;
-  *   - only `WARC-Type: response` records yield pages (warcinfo / request /
-  *     metadata records are skipped, as in real CC files);
+  *   - `.warc`, `.warc.gz` and `.warc.zst` are read; the CC layout (each
+  *     record its own gzip member / zstd frame) decompresses transparently
+  *     through [[decompress]];
+  *   - a reader keeps only its own record type (the page reader skips
+  *     warcinfo / request / metadata records, as in real CC files);
   *   - a response block starting with `HTTP/` has its HTTP response headers
   *     stripped — the page html is the entity body, as CC stores it; the
   *     `Content-Type: ...; charset=` parameter is CAPTURED, not discarded;
@@ -29,13 +27,23 @@ import java.nio.charset.StandardCharsets.UTF_8
   *     bodies pass through by reference;
   *   - header lines are bounded at 8 KB (a corrupt record without line
   *     terminators can no longer buffer the rest of the file), malformed
-  *     Content-Length skips the record — never kills the task.
+  *     Content-Length skips the record and oversized bodies are skipped
+  *     stream-aligned — never kills the task.
   *
-  * Write path: Hadoop `FileSystem` with task-attempt temp files + rename, so
-  * object stores (s3a/gs) and speculative execution / task retries are safe;
-  * `.warc.gz` writes each record as its own gzip member (the CC layout) with
-  * ONE `Deflater` reused across the partition — no per-record native-memory
-  * churn (a `GZIPOutputStream` per record leaks its Deflater until GC).
+  * One streaming archive reader: one task per archive file (gzip members
+  * are not arbitrarily splittable; production Common-Crawl jobs parallelize
+  * the same way), each streaming a Hadoop stream ([[openArchive]]) record by
+  * record — executor memory stays O(record), never O(file). [[read]] is the
+  * `warc` DataSourceV2 connector ([[WarcSource]]); the WET, WAT and revisit
+  * readers share one file-per-task RDD over [[WarcSource.listFiles]].
+  *
+  * One archive writer (`writeFiles`): Hadoop `FileSystem` with task-attempt
+  * temp files + rename, so object stores (s3a/gs) and speculative execution
+  * / task retries are safe; `.warc.gz` writes each record as its own gzip
+  * member (the CC layout) with ONE `Deflater` reused across the partition —
+  * no per-record native-memory churn (a `GZIPOutputStream` per record leaks
+  * its Deflater until GC). The CDX writers are the same writer with a
+  * per-record index line.
   *
   * Record layout written (WARC/1.0 `response` records, CC-shaped):
   *
@@ -83,6 +91,10 @@ object Warc {
       }
       null
     }
+
+  /** A WARC-Date value as epoch millis, or -1 when it does not parse. */
+  private def parseTs(v: String): Long =
+    try java.time.Instant.parse(v).toEpochMilli catch { case _: Exception => -1L }
 
   /** One serialized record: url, timestamp, and the record block (HTTP
     * response block or raw body). Public — Dataset encoder payload.
@@ -174,13 +186,8 @@ object Warc {
     writeFiles(pages, dir, gzip, zstd = false)(p =>
       record(p.url, p.warc_ts.getTime, p.html, http))
 
-  /** Write serialized records through the Hadoop FileSystem API: each task
-    * writes `.tmp-<nonce>-partNNNNN` then renames into place, so object
-    * stores, task retries and speculative execution never expose partial
-    * files (rename is the commit; both attempts produce identical bytes from
-    * deterministic input, so last-rename-wins is safe). Stale part/temp
-    * files from earlier runs are cleared first so a rerun with fewer
-    * partitions cannot leave orphans that read() would re-ingest.
+  /** Write serialized records, one archive per partition (`.warc`,
+    * `.warc.gz` or `.warc.zst`), through the one archive writer.
     */
   def writeRecords(recs: Dataset[WarcRec], dir: String, gzip: Boolean = false,
       zstd: Boolean = false): Unit =
@@ -273,11 +280,7 @@ object Warc {
     */
   def readRevisits(spark: SparkSession, dir: String): org.apache.spark.sql.DataFrame = {
     import spark.implicits._
-    spark.read.format("binaryFile").load(s"$dir/*.warc*")
-      .select(col("content"))
-      .as[Array[Byte]]
-      .mapPartitions(_.flatMap(b =>
-        parseRevisitStream(decompress(new java.io.ByteArrayInputStream(b)))))
+    readArchives(spark, dir)(parseRevisitStream)
       .toDF("url", "ts_ms", "refers_to", "refers_ms", "digest")
       .selectExpr("url", "timestamp_millis(ts_ms) AS warc_ts",
         "refers_to", "timestamp_millis(refers_ms) AS refers_ts", "digest")
@@ -311,9 +314,7 @@ object Warc {
     // epoch) resolve by url ONLY when that url has a single response
     // generation — never a guess between generations; only (url) headers
     // shuffle for the census, the payloads ride one join
-    val singleGen = resp.toDF().select(col("url").as("refers_to"))
-      .groupBy("refers_to").agg(count(lit(1)).as("__g")).where("__g = 1")
-      .select("refers_to")
+    val singleGen = generations(resp).where("generations = 1").select("refers_to")
     val fallback = revs.where("unix_millis(refers_ts) = 0")
       .join(singleGen, "refers_to")
       .join(respK.drop("refers_ts"), "refers_to")
@@ -332,109 +333,43 @@ object Warc {
     * know exactly how much smaller the logical corpus is than the archive.
     */
   def unresolvableRevisits(spark: SparkSession, dir: String): org.apache.spark.sql.DataFrame = {
-    val resp = read(spark, dir)
-    val multiGen = resp.toDF().select(col("url").as("refers_to"))
-      .groupBy("refers_to").agg(count(lit(1)).as("generations"))
-      .where("generations > 1")
+    val multiGen = generations(read(spark, dir)).where("generations > 1")
     readRevisits(spark, dir)
       .where("unix_millis(refers_ts) = 0")
       .join(multiGen, "refers_to")
       .select(col("url"), col("warc_ts"), col("refers_to"), col("generations"))
   }
 
-  /** Streaming revisit-record parse (line-bounded like [[parseStream]]);
-    * bodies (empty by construction, but tolerated if present) are skipped
-    * by Content-Length. The `md5:` digest prefix is stripped. Emits
-    * (url, tsMillis, refersTo, refersTsMillis, digest).
+  /** Response generations per url: (refers_to, generations). */
+  private def generations(resp: Dataset[PageRow]): org.apache.spark.sql.DataFrame =
+    resp.toDF().select(col("url").as("refers_to"))
+      .groupBy("refers_to").agg(count(lit(1)).as("generations"))
+
+  /** Streaming revisit-record parse: a projection over the record scanner.
+    * A row needs `WARC-Type: revisit`, a url, a refers-to url and a valid
+    * WARC-Date — an absent or corrupt date SKIPS the record (a 1970 sentinel
+    * would silently mis-timestamp downstream as-of / CDX consumers), while a
+    * corrupt or absent Refers-To-Date degrades to 0, which readResolved's
+    * unambiguous-url fallback handles. Bodies (empty by construction, but
+    * tolerated if present) are skipped by Content-Length. The `md5:` digest
+    * prefix is stripped. Emits (url, tsMillis, refersTo, refersTsMillis,
+    * digest).
     */
   def parseRevisitStream(in: java.io.InputStream): Iterator[(String, Long, String, Long, String)] =
-    new Iterator[(String, Long, String, Long, String)] {
-      private val bin = new java.io.BufferedInputStream(in, 1 << 16)
-      private var nextRow: (String, Long, String, Long, String) = advance()
-
-      private def line(): String = {
-        val sb = new java.lang.StringBuilder(64)
-        var c = bin.read()
-        if (c < 0) return null
-        var truncated = false
-        while (c >= 0 && c != '\n') {
-          if (c != '\r') {
-            if (sb.length < maxHeaderLine) sb.append(c.toChar)
-            else truncated = true
-          }
-          c = bin.read()
-        }
-        if (truncated) " overlong" else sb.toString
-      }
-
-      // -1 = corrupt: a record with an unparseable WARC-Date is SKIPPED
-      // (a 1970 sentinel would silently mis-timestamp downstream as-of /
-      // CDX consumers); a corrupt Refers-To-Date degrades to absent (0),
-      // which readResolved's unambiguous-url fallback handles
-      private def parseTs(v: String): Long =
-        try java.time.Instant.parse(v).toEpochMilli catch { case _: Exception => -1L }
-
-      private def advance(): (String, Long, String, Long, String) = {
-        var l0 = line()
-        while (l0 != null) {
-          if (l0.startsWith("WARC/")) {
-            var typ: String = null
-            var url: String = null
-            // -1 = ABSENT: a record with no WARC-Date at all must skip the
-            // same way a corrupt one does (never emit at a silent epoch);
-            // a genuine 1970-01-01 date parses to 0 and is kept
-            var date = -1L
-            var refers: String = null
-            var refersDate = 0L
-            var digest: String = null
-            var len = -1L
-            var h = line()
-            while (h != null && h.nonEmpty) {
-              val i = h.indexOf(':')
-              if (i > 0) {
-                val k = h.substring(0, i).trim
-                val v = h.substring(i + 1).trim
-                k match {
-                  case "WARC-Type" => typ = v
-                  case "WARC-Target-URI" => url = v
-                  case "WARC-Date" => date = parseTs(v)
-                  case "WARC-Refers-To-Target-URI" => refers = v
-                  case "WARC-Refers-To-Date" => refersDate = math.max(parseTs(v), 0L)
-                  case "WARC-Payload-Digest" =>
-                    digest = if (v.startsWith("md5:")) v.substring(4) else v
-                  case "Content-Length" => len = contentLength(v)
-                  case _ => ()
-                }
-              }
-              h = line()
-            }
-            if (len >= 0) {
-              val body = readBody(bin, len) // skipped (empty for our revisits)
-              if (body != null && typ == "revisit" && url != null && refers != null && date >= 0)
-                return (url, date, refers, refersDate, if (digest == null) "" else digest)
-            }
-          }
-          l0 = line()
-        }
-        null
-      }
-
-      def hasNext: Boolean = nextRow != null
-      def next(): (String, Long, String, Long, String) = {
-        val r = nextRow; nextRow = advance(); r
-      }
+    scan(in) { r =>
+      val date = if (r.date == null) -1L else parseTs(r.date)
+      if (r.block != null && r.typ == "revisit" && r.url != null && r.refers != null && date >= 0) {
+        val refersDate = if (r.refersDate == null) 0L else math.max(parseTs(r.refersDate), 0L)
+        (r.url, date, r.refers, refersDate, if (r.digest == null) "" else r.digest.stripPrefix("md5:"))
+      } else null
     }
 
-  /** WET read (file-per-partition, streaming decode like the DSv2 response
+  /** WET read (one task per archive file, streaming like the DSv2 response
     * reader — WET files are sized for exactly this file-level parallelism).
     */
   def readWet(spark: SparkSession, dir: String): Dataset[PageRow] = {
     import spark.implicits._
-    spark.read.format("binaryFile").load(s"$dir/*.warc*")
-      .select(col("content"))
-      .as[Array[Byte]]
-      .mapPartitions(_.flatMap(b =>
-        parseWetStream(decompress(new java.io.ByteArrayInputStream(b)))))
+    readArchives(spark, dir)(parseWetStream)
   }
 
   /** WAT JSON payload for one page — the Common-Crawl WAT envelope subset a
@@ -485,15 +420,23 @@ object Warc {
     */
   def readWat(spark: SparkSession, dir: String): Dataset[PageRow] = {
     import spark.implicits._
-    spark.read.format("binaryFile").load(s"$dir/*.warc*")
-      .select(col("content"))
-      .as[Array[Byte]]
-      .mapPartitions(_.flatMap(b =>
-        parseTyped(decompress(new java.io.ByteArrayInputStream(b)), "metadata")))
+    readArchives(spark, dir)(parseTyped(_, "metadata"))
   }
 
-  private def writeFiles[T](ds: Dataset[T], dir: String, gzip: Boolean, zstd: Boolean)(
-      ser: T => Array[Byte]): Unit = {
+  /** The one archive writer. Every writer clears the same stale set first
+    * (`.warc`, `.warc.gz`, `.warc.zst`, `.cdx` and `.tmp-*`), so a rerun
+    * with fewer partitions, another codec or no index cannot leave archives
+    * that [[read]] would re-ingest or sidecars that point into rewritten
+    * archives. Each task writes `.tmp-<nonce>-<attempt>-<name>` and renames
+    * it into place, so object stores, task retries and speculative
+    * execution never expose partial files (rename is the commit; attempts
+    * produce identical bytes from deterministic input, so last-rename-wins
+    * is safe). With `cdx`, a `.cdx` sidecar gets one line per record:
+    * `cdx(record, serialized record, "offset\tlength\tfilename")`, the
+    * pointer being the record's compressed-byte span in the archive.
+    */
+  private def writeFiles[T](ds: Dataset[T], dir: String, gzip: Boolean, zstd: Boolean,
+      cdx: (T, Array[Byte], String) => String = null)(ser: T => Array[Byte]): Unit = {
     import org.apache.hadoop.fs.Path
     val spark = ds.sparkSession
     val dirPath = new Path(dir)
@@ -502,7 +445,7 @@ object Warc {
     val stale = fs.listStatus(dirPath).filter { st =>
       val n = st.getPath.getName
       n.endsWith(".warc") || n.endsWith(".warc.gz") || n.endsWith(".warc.zst") ||
-        n.startsWith(".tmp-")
+        n.endsWith(".cdx") || n.startsWith(".tmp-")
     }
     stale.foreach(st => fs.delete(st.getPath, false))
     val ext = if (gzip) "warc.gz" else if (zstd) "warc.zst" else "warc"
@@ -514,30 +457,38 @@ object Warc {
       // conf from the classpath (core-site.xml), which is where object-store
       // credentials/impl classes live on a real deployment
       val efs = new Path(dir).getFileSystem(new org.apache.hadoop.conf.Configuration())
-      val tmp = new Path(dir, f".tmp-$nonce-${tc.taskAttemptId()}%d-part-$pid%05d.$ext")
-      val dst = new Path(dir, f"part-$pid%05d.$ext")
-      val os = new java.io.BufferedOutputStream(efs.create(tmp, true), 1 << 16)
-      if (gzip) {
-        val gz = new GzipMemberWriter(os)
-        try it.foreach(r => gz.writeMember(ser(r)))
-        finally { gz.end(); os.close() }
-      } else if (zstd) {
-        // CC .warc.zst layout: each record its OWN zstd frame (independently
-        // decodable/seekable, like the gzip-member layout; CC additionally
-        // ships a dictionary in a skippable frame — not emitted here, and
-        // not needed for reading). One reused ZstdCompressCtx per partition,
-        // no per-record native-context churn; the reader's continuous-mode
-        // ZstdInputStream walks the concatenated frames.
-        val ctx = new com.github.luben.zstd.ZstdCompressCtx()
-        try it.foreach(r => os.write(ctx.compress(ser(r))))
-        finally { ctx.close(); os.close() }
-      } else {
-        try it.foreach(r => os.write(ser(r)))
-        finally os.close()
+      def tmp(name: String) = new Path(dir, f".tmp-$nonce-${tc.taskAttemptId()}%d-$name")
+      val name = f"part-$pid%05d.$ext"
+      val cdxName = f"part-$pid%05d.cdx"
+      val os = new CountingOs(new java.io.BufferedOutputStream(efs.create(tmp(name), true), 1 << 16))
+      val cdxOs = if (cdx == null) null
+        else new java.io.BufferedOutputStream(efs.create(tmp(cdxName), true), 1 << 16)
+      val gz = if (gzip) new GzipMemberWriter(os) else null
+      // CC .warc.zst layout: each record its OWN zstd frame (independently
+      // decodable/seekable; CC's dictionary frame is not emitted, nor needed
+      // to read). One reused ZstdCompressCtx per partition, no per-record
+      // native-context churn.
+      val zctx = if (!gzip && zstd) new com.github.luben.zstd.ZstdCompressCtx() else null
+      try it.foreach { r =>
+        val rec = ser(r)
+        val off = os.count
+        if (gz != null) gz.writeMember(rec)
+        else if (zctx != null) os.write(zctx.compress(rec))
+        else os.write(rec)
+        if (cdxOs != null)
+          cdxOs.write((cdx(r, rec, s"$off\t${os.count - off}\t$name") + "\n").getBytes(UTF_8))
+      } finally {
+        if (gz != null) gz.end()
+        if (zctx != null) zctx.close()
+        os.close()
+        if (cdxOs != null) cdxOs.close()
       }
-      if (efs.exists(dst)) efs.delete(dst, false)
-      if (!efs.rename(tmp, dst))
-        throw new java.io.IOException(s"rename $tmp -> $dst failed")
+      for (n <- if (cdxOs == null) Seq(name) else Seq(name, cdxName)) {
+        val dst = new Path(dir, n)
+        if (efs.exists(dst)) efs.delete(dst, false)
+        if (!efs.rename(tmp(n), dst))
+          throw new java.io.IOException(s"rename ${tmp(n)} -> $dst failed")
+      }
     }
   }
 
@@ -553,9 +504,40 @@ object Warc {
     */
   def parseWetStream(in: java.io.InputStream): Iterator[PageRow] = parseTyped(in, "conversion")
 
-  private def parseTyped(in: java.io.InputStream, wantType: String): Iterator[PageRow] = new Iterator[PageRow] {
+  /** Typed-record projection over the scanner: the block must be read in
+    * full, the type must be absent or `wantType`, and the url present.
+    * Response blocks have their HTTP headers stripped (charset captured);
+    * every body is charset-normalized to UTF-8.
+    */
+  private def parseTyped(in: java.io.InputStream, wantType: String): Iterator[PageRow] =
+    scan(in) { r =>
+      if (r.block != null && r.block.length == r.len && (r.typ == null || r.typ == wantType) &&
+        r.url != null) {
+        // a CORRUPT WARC-Date skips the record (never a task-killing parse
+        // exception or a silent mis-stamp); an ABSENT date keeps epoch 0
+        val tsMs = if (r.date == null) 0L else parseTs(r.date)
+        if (tsMs < 0) null
+        else {
+          // conversion / metadata records carry plain payloads — no HTTP envelope
+          val (raw, charset) =
+            if (wantType == "response") stripHttpHeadersCs(r.block) else (r.block, null)
+          PageRow(r.url, new java.sql.Timestamp(tsMs), CharsetSniff.toUtf8(raw, charset), null, null)
+        }
+      } else null
+    }
+
+  /** The one WARC record scanner. [[next]] skips to the next `WARC/` line,
+    * reads the headers some reader projects (a fixed match, no per-record
+    * map) up to the blank line, then the body by Content-Length; the fields
+    * hold that record until the next call. `block` is null when
+    * Content-Length is absent or malformed or the oversize skip fired, and
+    * shorter than `len` when the stream ended inside the body.
+    */
+  private final class RecordScanner(in: java.io.InputStream) {
     private val bin = new java.io.BufferedInputStream(in, 1 << 16)
-    private var nextRow: PageRow = advance()
+    var typ, url, date, refers, refersDate, digest: String = _
+    var len: Long = -1L
+    var block: Array[Byte] = _
 
     /** Next CRLF-terminated line (terminator dropped), or null at EOF. A
       * line beyond maxHeaderLine is skimmed (not buffered) and replaced by a
@@ -573,60 +555,45 @@ object Warc {
         }
         c = bin.read()
       }
-      if (truncated) " overlong" else sb.toString
+      if (truncated) "\u0000overlong" else sb.toString
     }
 
-    private def advance(): PageRow = {
+    /** Advances to the next record; false at EOF. */
+    def next(): Boolean = {
       var l0 = line()
-      while (l0 != null) {
-        if (l0.startsWith("WARC/")) {
-          var typ: String = null
-          var url: String = null
-          var date: String = null
-          var len = -1L
-          var h = line()
-          while (h != null && h.nonEmpty) {
-            val i = h.indexOf(':')
-            if (i > 0) {
-              val k = h.substring(0, i).trim
-              val v = h.substring(i + 1).trim
-              k match {
-                case "WARC-Type" => typ = v
-                case "WARC-Target-URI" => url = v
-                case "WARC-Date" => date = v
-                // malformed length → skip the record, never kill the task
-                case "Content-Length" => len = contentLength(v)
-                case _ => ()
-              }
-            }
-            h = line()
-          }
-          val block = if (len >= 0) readBody(bin, len) else null
-          if (block != null && block.length == len && (typ == null || typ == wantType) && url != null) {
-            // conversion records carry plain text — no HTTP envelope
-            val (raw, charset) =
-              if (wantType == "response") stripHttpHeadersCs(block) else (block, null)
-            val body = CharsetSniff.toUtf8(raw, charset)
-            // a CORRUPT WARC-Date skips the record (the parseRevisitStream
-            // rule — never a DateTimeParseException killing the task,
-            // never a silent mis-stamp); an ABSENT date keeps the
-            // legacy epoch stamp (fuzz-spec-pinned behavior)
-            val tsMs =
-              if (date == null) 0L
-              else try java.time.Instant.parse(date).toEpochMilli
-                   catch { case _: Exception => -1L }
-            if (tsMs >= 0)
-              return PageRow(url, new java.sql.Timestamp(tsMs), body, null, null)
+      while (l0 != null && !l0.startsWith("WARC/")) l0 = line()
+      if (l0 == null) return false
+      typ = null; url = null; date = null; refers = null; refersDate = null; digest = null
+      len = -1L
+      var h = line()
+      while (h != null && h.nonEmpty) {
+        val i = h.indexOf(':')
+        if (i > 0) {
+          val k = h.substring(0, i).trim
+          val v = h.substring(i + 1).trim
+          k match {
+            case "WARC-Type" => typ = v
+            case "WARC-Target-URI" => url = v
+            case "WARC-Date" => date = v
+            case "WARC-Refers-To-Target-URI" => refers = v
+            case "WARC-Refers-To-Date" => refersDate = v
+            case "WARC-Payload-Digest" => digest = v
+            // malformed length → skip the record, never kill the task
+            case "Content-Length" => len = contentLength(v)
+            case _ => ()
           }
         }
-        l0 = line()
+        h = line()
       }
-      null
+      block = if (len >= 0) readBody(bin, len) else null
+      true
     }
-
-    def hasNext: Boolean = nextRow != null
-    def next(): PageRow = { val r = nextRow; nextRow = advance(); r }
   }
+
+  /** The records of `in` that `project` maps to a row (null = skip). */
+  private def scan[T <: AnyRef](in: java.io.InputStream)(project: RecordScanner => T): Iterator[T] =
+    Iterator.unfold(new RecordScanner(in))(s => if (s.next()) Some((project(s), s)) else None)
+      .filter(_ != null)
 
   /** CC response blocks wrap the page in an HTTP response; the html is the
     * entity body after the header terminator, and the Content-Type header's
@@ -654,9 +621,6 @@ object Warc {
     }
     (block, null)
   }
-
-  /** Header-discarding strip (fixtures/back-compat). */
-  def stripHttpHeaders(block: Array[Byte]): Array[Byte] = stripHttpHeadersCs(block)._1
 
   /** Legacy whole-array entry (fixtures); delegates to the stream parser. */
   def parse(bytes: Array[Byte]): Iterator[PageRow] =
@@ -750,15 +714,29 @@ object Warc {
       .as[PageRow]
   }
 
-  /** Legacy whole-file read path (binaryFile + in-memory parse); kept for
-    * comparison tests — prefer `read`.
+  /** One archive file as a decompressed stream: Hadoop `open` (file://,
+    * hdfs:// and object stores alike) followed by [[decompress]].
     */
-  def readViaBinaryFile(spark: SparkSession, dir: String): Dataset[PageRow] = {
-    import spark.implicits._
-    spark.read.format("binaryFile").load(s"$dir/*.warc*")
-      .select(col("content"))
-      .as[Array[Byte]]
-      .mapPartitions(_.flatMap(parseFile))
+  def openArchive(file: String): java.io.InputStream = {
+    import org.apache.hadoop.fs.Path
+    val p = new Path(file)
+    val raw = p.getFileSystem(new org.apache.hadoop.conf.Configuration()).open(p)
+    try decompress(raw) catch { case e: Throwable => raw.close(); throw e }
+  }
+
+  /** One task per archive file under `dir`, each streaming its records
+    * through `parse` — the file-level parallelism of [[read]]'s connector
+    * for the readers that project something other than page rows.
+    */
+  private def readArchives[T: Encoder: scala.reflect.ClassTag](spark: SparkSession, dir: String)(
+      parse: java.io.InputStream => Iterator[T]): Dataset[T] = {
+    val files = WarcSource.listFiles(dir)
+    spark.createDataset(spark.sparkContext.parallelize(files.toSeq, math.max(files.length, 1))
+      .mapPartitions(_.flatMap { f =>
+        val in = openArchive(f)
+        org.apache.spark.TaskContext.get().addTaskCompletionListener[Unit](_ => in.close())
+        parse(in)
+      }))
   }
 
   // ------------------------------------------------------------------
@@ -789,53 +767,19 @@ object Warc {
   private val cdxTsFmt = java.time.format.DateTimeFormatter.ofPattern("yyyyMMddHHmmss")
     .withZone(java.time.ZoneOffset.UTC)
 
-  /** Write `.warc.gz` archives (one per partition, same tmp/rename commit
-    * discipline as [[writeRecords]]) PLUS a `.cdx` sidecar per archive:
-    * TSV lines `url  ts  digest  offset  length  filename`, one per gzip
-    * member. Offsets/lengths are compressed-member-exact, so
-    * [[readRecordAt]] can fetch any record with one ranged read.
+  private def cdxTs(tsMillis: Long): String = cdxTsFmt.format(java.time.Instant.ofEpochMilli(tsMillis))
+
+  /** Write `.warc.gz` archives (one per partition, the [[writeRecords]]
+    * writer) PLUS a `.cdx` sidecar per archive: TSV lines
+    * `url  ts  digest  offset  length  filename`, one per gzip member.
+    * Offsets/lengths are compressed-member-exact, so [[readRecordAt]] can
+    * fetch any record with one ranged read.
     */
-  def writeWithCdx(recs: Dataset[WarcRec], dir: String): Unit = {
-    import org.apache.hadoop.fs.Path
-    val spark = recs.sparkSession
-    val dirPath = new Path(dir)
-    val fs = dirPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.mkdirs(dirPath)
-    fs.listStatus(dirPath).filter { st =>
-      val n = st.getPath.getName
-      n.endsWith(".warc.gz") || n.endsWith(".cdx") || n.startsWith(".tmp-")
-    }.foreach(st => fs.delete(st.getPath, false))
-    val nonce = java.util.UUID.randomUUID().toString.take(8)
-    recs.foreachPartition { (it: Iterator[WarcRec]) =>
-      val tc = org.apache.spark.TaskContext.get()
-      val pid = tc.partitionId()
-      val efs = new Path(dir).getFileSystem(new org.apache.hadoop.conf.Configuration())
-      val name = f"part-$pid%05d.warc.gz"
-      val tmpW = new Path(dir, f".tmp-$nonce-${tc.taskAttemptId()}%d-$name")
-      val tmpC = new Path(dir, f".tmp-$nonce-${tc.taskAttemptId()}%d-part-$pid%05d.cdx")
-      val cos = new CountingOs(new java.io.BufferedOutputStream(efs.create(tmpW, true), 1 << 16))
-      val cdx = new java.io.BufferedOutputStream(efs.create(tmpC, true), 1 << 16)
-      val gz = new GzipMemberWriter(cos)
-      try {
-        it.foreach { r =>
-          val block = recordBlock(r.url, r.tsMillis, r.block)
-          val off = cos.count
-          gz.writeMember(block)
-          val line = s"${r.url}\t${cdxTsFmt.format(java.time.Instant.ofEpochMilli(r.tsMillis))}\t" +
-            s"${md5hex(block)}\t$off\t${cos.count - off}\t$name\n"
-          cdx.write(line.getBytes(UTF_8))
-        }
-      } finally { gz.end(); cos.close(); cdx.close() }
-      def commit(tmp: Path, dstName: String): Unit = {
-        val dst = new Path(dir, dstName)
-        if (efs.exists(dst)) efs.delete(dst, false)
-        if (!efs.rename(tmp, dst))
-          throw new java.io.IOException(s"rename $tmp -> $dst failed")
-      }
-      commit(tmpW, name)
-      commit(tmpC, f"part-$pid%05d.cdx")
-    }
-  }
+  def writeWithCdx(recs: Dataset[WarcRec], dir: String): Unit =
+    writeFiles(recs, dir, gzip = true, zstd = false,
+      cdx = (r: WarcRec, rec: Array[Byte], ptr: String) =>
+        s"${r.url}\t${cdxTs(r.tsMillis)}\t${md5hex(rec)}\t$ptr")(r =>
+      recordBlock(r.url, r.tsMillis, r.block))
 
   /** REVISIT-AWARE CDX publication — the OpenWayback/pywb deduplicated-
     * archive index convention: write the [[writeWithRevisits]] archive AND
@@ -848,61 +792,26 @@ object Warc {
     * member WITHOUT opening the archive: [[resolveRevisitCdx]].
     * TSV: url ts rec_digest payload_digest offset length filename type.
     */
-  def writeRevisitCdx(recs: Dataset[WarcRec], dir: String): Unit = {
-    import org.apache.hadoop.fs.Path
-    val spark = recs.sparkSession
-    val dirPath = new Path(dir)
-    val fs = dirPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.mkdirs(dirPath)
-    fs.listStatus(dirPath).filter { st =>
-      val n = st.getPath.getName
-      n.endsWith(".warc.gz") || n.endsWith(".cdx") || n.startsWith(".tmp-")
-    }.foreach(st => fs.delete(st.getPath, false))
-    val nonce = java.util.UUID.randomUUID().toString.take(8)
-    revisitTagged(recs).foreachPartition {
-      (it: Iterator[(String, Long, Array[Byte], String, Boolean)]) =>
-      val tc = org.apache.spark.TaskContext.get()
-      val pid = tc.partitionId()
-      val efs = new Path(dir).getFileSystem(new org.apache.hadoop.conf.Configuration())
-      val name = f"part-$pid%05d.warc.gz"
-      val tmpW = new Path(dir, f".tmp-$nonce-${tc.taskAttemptId()}%d-$name")
-      val tmpC = new Path(dir, f".tmp-$nonce-${tc.taskAttemptId()}%d-part-$pid%05d.cdx")
-      val cos = new CountingOs(new java.io.BufferedOutputStream(efs.create(tmpW, true), 1 << 16))
-      val cdx = new java.io.BufferedOutputStream(efs.create(tmpC, true), 1 << 16)
-      val gz = new GzipMemberWriter(cos)
-      try {
-        it.foreach { case (url, ts, block, payloadDigest, isOrig) =>
-          val off = cos.count
-          gz.writeMember(block)
-          val typ = if (isOrig) "response" else "revisit"
-          val line = s"$url\t${cdxTsFmt.format(java.time.Instant.ofEpochMilli(ts))}\t" +
-            s"${md5hex(block)}\t$payloadDigest\t$off\t${cos.count - off}\t$name\t$typ\n"
-          cdx.write(line.getBytes(UTF_8))
-        }
-      } finally { gz.end(); cos.close(); cdx.close() }
-      def commit(tmp: Path, dstName: String): Unit = {
-        val dst = new Path(dir, dstName)
-        if (efs.exists(dst)) efs.delete(dst, false)
-        if (!efs.rename(tmp, dst))
-          throw new java.io.IOException(s"rename $tmp -> $dst failed")
-      }
-      commit(tmpW, name)
-      commit(tmpC, f"part-$pid%05d.cdx")
-    }
-  }
+  def writeRevisitCdx(recs: Dataset[WarcRec], dir: String): Unit =
+    writeFiles(revisitTagged(recs), dir, gzip = true, zstd = false,
+      cdx = (t: (String, Long, Array[Byte], String, Boolean), rec: Array[Byte], ptr: String) =>
+        s"${t._1}\t${cdxTs(t._2)}\t${md5hex(rec)}\t${t._4}\t$ptr\t" +
+          (if (t._5) "response" else "revisit"))(_._3)
 
   /** The revisit-aware CDX sidecars as a DataFrame (8 columns — see
     * [[writeRevisitCdx]]). */
   def readRevisitCdx(spark: SparkSession, dir: String): org.apache.spark.sql.DataFrame =
-    spark.read.text(s"$dir/*.cdx").selectExpr(
-      "split(value, '\t')[0] AS url",
-      "split(value, '\t')[1] AS cdx_ts",
-      "split(value, '\t')[2] AS rec_digest",
-      "split(value, '\t')[3] AS payload_digest",
-      "CAST(split(value, '\t')[4] AS BIGINT) AS offset",
-      "CAST(split(value, '\t')[5] AS BIGINT) AS length",
-      "split(value, '\t')[6] AS filename",
-      "split(value, '\t')[7] AS rtype")
+    cdxColumns(spark, dir, "url", "cdx_ts", "rec_digest", "payload_digest", "offset", "length",
+      "filename", "rtype")
+
+  /** The `.cdx` sidecars of `dir` split into the named TSV columns
+    * (`offset` and `length` as BIGINT).
+    */
+  private def cdxColumns(spark: SparkSession, dir: String, cols: String*): org.apache.spark.sql.DataFrame =
+    spark.read.text(s"$dir/*.cdx").selectExpr(cols.zipWithIndex.map { case (c, i) =>
+      val v = s"split(value, '\t')[$i]"
+      if (c == "offset" || c == "length") s"CAST($v AS BIGINT) AS $c" else s"$v AS $c"
+    }: _*)
 
   /** The PLAYBACK index of a deduplicated archive: every capture row with
     * its payload pointer RESOLVED — a response points at its own member, a
@@ -945,13 +854,7 @@ object Warc {
     * executor cost, never O(archive).
     */
   def readCdx(spark: SparkSession, dir: String): org.apache.spark.sql.DataFrame =
-    spark.read.text(s"$dir/*.cdx").selectExpr(
-      "split(value, '\t')[0] AS url",
-      "split(value, '\t')[1] AS cdx_ts",
-      "split(value, '\t')[2] AS digest",
-      "CAST(split(value, '\t')[3] AS BIGINT) AS offset",
-      "CAST(split(value, '\t')[4] AS BIGINT) AS length",
-      "split(value, '\t')[5] AS filename")
+    cdxColumns(spark, dir, "url", "cdx_ts", "digest", "offset", "length", "filename")
 
   /** The Common Crawl COLUMNAR INDEX shape (CC's `ccindex` parquet table,
     * the product behind "query the crawl with Athena/Spark SQL"): the CDX
@@ -977,9 +880,10 @@ object Warc {
   }
 
   /** Random access: seek to `offset`, read exactly `length` compressed
-    * bytes, inflate the one gzip member, parse the one record — the CC
-    * index fetch path. `verifyDigest` (from the index) makes corruption
-    * loud. Same charset normalization as the bulk read.
+    * bytes, inflate the one member, parse the one record — the CC index
+    * fetch path. `verifyDigest` (from the index: md5 of the inflated record
+    * bytes) makes corruption loud. Same charset normalization as the bulk
+    * read.
     */
   def readRecordAt(dir: String, filename: String, offset: Long, length: Long,
                    verifyDigest: String = null): PageRow = {
@@ -988,15 +892,10 @@ object Warc {
     val in = p.getFileSystem(new org.apache.hadoop.conf.Configuration()).open(p)
     val slice = new Array[Byte](length.toInt)
     try { in.seek(offset); in.readFully(slice) } finally in.close()
-    if (verifyDigest != null) {
-      // the index digest is md5 of the full inflated record bytes — exactly
-      // what the member contains
-      val full = new java.util.zip.GZIPInputStream(
-        new java.io.ByteArrayInputStream(slice)).readAllBytes()
-      require(md5hex(full) == verifyDigest,
-        s"digest mismatch for $filename @ $offset")
-    }
-    val rows = parseStream(decompress(new java.io.ByteArrayInputStream(slice)))
+    val full = decompress(new java.io.ByteArrayInputStream(slice)).readAllBytes()
+    require(verifyDigest == null || md5hex(full) == verifyDigest,
+      s"digest mismatch for $filename @ $offset")
+    val rows = parseStream(new java.io.ByteArrayInputStream(full))
     require(rows.hasNext, s"no record in $filename @ $offset+$length")
     rows.next()
   }

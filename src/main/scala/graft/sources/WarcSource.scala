@@ -13,15 +13,15 @@ import scala.jdk.CollectionConverters._
 
 /** DataSourceV2 WARC reader: `spark.read.format("warc").load(dir)`.
   *
-  * Why a connector instead of the `binaryFile` + mapPartitions path: a real
-  * Common-Crawl archive file is ~1 GB, and `binaryFile` materializes the
-  * WHOLE file as one byte array per row before parsing. This source opens a
-  * Hadoop `FSDataInputStream` per file and streams records through
-  * [[Warc.parseStream]] — executor memory stays O(record) regardless of
-  * archive size, and the same code path works on file://, hdfs:// and
-  * object stores. Parallelism is one partition per archive file (WARC's
-  * gzip-member layout is not arbitrarily splittable; CC files are sized for
-  * exactly this file-level parallelism).
+  * A real Common-Crawl archive file is ~1 GB, so no reader may hold a whole
+  * file in memory. This source opens each file through [[Warc.openArchive]]
+  * (a Hadoop stream, decompressed by magic number) and streams records
+  * through [[Warc.parseStream]] — executor memory stays O(record)
+  * regardless of archive size, and the same code path works on file://,
+  * hdfs:// and object stores. Parallelism is one partition per archive file
+  * from [[WarcSource.listFiles]] (WARC's gzip-member layout is not
+  * arbitrarily splittable; CC files are sized for exactly this file-level
+  * parallelism).
   *
   * Column pruning is pushed into the reader: a query that only needs `url`
   * never copies the html payload into rows. Charset normalization (see
@@ -48,8 +48,10 @@ object WarcSource {
     StructField("html", BinaryType, nullable = false)
   ))
 
-  /** The .warc / .warc.gz files under `dir` (sorted — deterministic
-    * partition order).
+  /** The .warc / .warc.gz / .warc.zst files under `dir` (sorted —
+    * deterministic partition order). Names starting with `.` or `_` are
+    * hidden, as in Spark's file sources: a writer's in-flight or abandoned
+    * `.tmp-…` attempt is not an archive.
     */
   def listFiles(dir: String): Array[String] = {
     import org.apache.hadoop.fs.Path
@@ -59,7 +61,8 @@ object WarcSource {
       .map(_.getPath)
       .filter { f =>
         val n = f.getName
-        n.endsWith(".warc") || n.endsWith(".warc.gz") || n.endsWith(".warc.zst")
+        !n.startsWith(".") && !n.startsWith("_") &&
+          (n.endsWith(".warc") || n.endsWith(".warc.gz") || n.endsWith(".warc.zst"))
       }
       .map(_.toString).toArray.sorted
   }
@@ -148,13 +151,8 @@ final class WarcReaderFactory(required: StructType) extends PartitionReaderFacto
 /** Streams one archive file; O(record) executor memory. */
 final class WarcPartitionReader(file: String, required: StructType)
     extends PartitionReader[InternalRow] {
-  import org.apache.hadoop.fs.Path
-
-  private val raw = {
-    val p = new Path(file)
-    p.getFileSystem(new org.apache.hadoop.conf.Configuration()).open(p)
-  }
-  private val it = Warc.parseStream(Warc.decompress(raw)) // magic-sniffed gzip/zstd/plain
+  private val in = Warc.openArchive(file)
+  private val it = Warc.parseStream(in)
   private var cur: graft.spark.PageRow = _
   // column indices resolved once (pruned schema order)
   private val wantUrl = required.fieldNames.indexOf("url")
@@ -172,5 +170,5 @@ final class WarcPartitionReader(file: String, required: StructType)
     row
   }
 
-  override def close(): Unit = raw.close()
+  override def close(): Unit = in.close()
 }

@@ -334,4 +334,30 @@ class DomVectorsSpec extends AnyFunSuite {
       s"relative order of fostered nodes preserved, table last: $kids")
     assert(sink.arena.size > 0)
   }
+
+  test("extract-mode numeric references: base-10 decimals, one hex end, saturation to U+FFFD") {
+    def page(body: String) = s"<html><body><p>$body</p></body></html>"
+    // byte mode (extract over ASCII bytes) and codepoint mode agree
+    def both(body: String): Seq[ExtractResult] =
+      Seq(Extractor.extract(page(body).getBytes("UTF-8")), ex(page(body)))
+    both("don&#8217;t stop").foreach(r => assert(r.mainText == "don\u2019t stop"))
+    both("caf&#233; ok").foreach(r => assert(r.text == "caf\u00e9 ok"))
+    both("&#x41;z tail").foreach(r =>
+      assert(r.text == "Az tail", s"hex ';' must end the reference once: ${r.text}"))
+    both("&#99999999999;x").foreach(r => assert(r.text == "\ufffdx"))
+  }
+
+  test("extract over bytes is the kernel's byte entry: BOM stripped, legacy charset sniffed") {
+    val w1252 = "<html><body><p>caf\u00e9 au lait</p></body></html>"
+      .getBytes(java.nio.charset.Charset.forName("windows-1252"))
+    val bom = Array[Byte](0xef.toByte, 0xbb.toByte, 0xbf.toByte) ++
+      "<html><body><p>b\u00f8m page</p></body></html>".getBytes("UTF-8")
+    for ((html, want) <- Seq(w1252 -> "caf\u00e9 au lait", bom -> "b\u00f8m page")) {
+      val viaExtract = Extractor.extract(html)
+      val viaInto = Extractor.extractInto(html, new ExtractSink)
+      assert(viaExtract.text == viaInto.text && viaExtract.mainText == viaInto.mainText)
+      assert(viaExtract.text == want)
+      assert(!viaExtract.text.contains('\ufeff'))
+    }
+  }
 }

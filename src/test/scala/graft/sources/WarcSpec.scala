@@ -99,7 +99,16 @@ class WarcSpec extends AnyFunSuite with BeforeAndAfterAll {
     val good2 = Warc.record("https://ok/2", 2000L, "page two".getBytes)
     val rows = Warc.parse(good ++ evil ++ "\r\n\r\n".getBytes ++ good2).toVector
     assert(rows.map(_.url) === Vector("https://ok/1", "https://ok/2"))
+    // the revisit reader shares the scanner: a revisit after the same
+    // garbage still parses
+    val rv = Warc.parseRevisitStream(new java.io.ByteArrayInputStream(
+      good ++ evil ++ "\r\n\r\n".getBytes ++ revisitRec("https://ok/rv", 3000L))).toVector
+    assert(rv.map(_._1) === Vector("https://ok/rv"))
   }
+
+  private def revisitRec(url: String, ts: Long): Array[Byte] =
+    Warc.recordBlock(url, ts, Array.empty[Byte], warcType = "revisit",
+      extraHeaders = Seq("WARC-Refers-To-Target-URI" -> "https://ok/1"))
 
   test("fuzz: garbage bytes, truncated record, missing CRLFs yield exactly the valid records") {
     val r1 = Warc.record("https://ok/a", 1000L, "alpha".getBytes)
@@ -113,6 +122,11 @@ class WarcSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(rows.map(_.url).contains("https://ok/b"))
     assert(!rows.map(_.url).contains("https://ok/c")) // truncated body → dropped
     assert(!rows.map(_.url).contains("https://ok/d")) // malformed length → dropped
+    // a revisit after the garbage, LF-only record and malformed length parses
+    val rv = Warc.parseRevisitStream(new java.io.ByteArrayInputStream(
+      r1 ++ garbage ++ "\r\n".getBytes ++ noCrlf ++ "\r\n".getBytes ++ badLen ++
+        "\r\n".getBytes ++ revisitRec("https://ok/rv", 3000L))).toVector
+    assert(rv.map(_._1) === Vector("https://ok/rv"))
   }
 
   test("corrupt WARC-Date skips the record (no task-killing parse exception); absent date keeps epoch") {
@@ -279,7 +293,7 @@ class WarcSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(rows.map(_.url) === Vector("https://z/1", "https://z/2"))
   }
 
-  test("DataSourceV2 warc format equals the binaryFile parse path") {
+  test("DataSourceV2 warc format equals the per-archive parseFile path") {
     val ss = spark
     import ss.implicits._
     val dir = java.nio.file.Files.createTempDirectory("warcdsv2").toString
@@ -287,11 +301,13 @@ class WarcSpec extends AnyFunSuite with BeforeAndAfterAll {
     val viaDsv2 = Warc.read(spark, dir)
       .map(p => (p.url, java.util.Arrays.hashCode(p.html), p.warc_ts.getTime))
       .collect().sortBy(_._1)
-    val viaBinary = Warc.readViaBinaryFile(spark, dir)
+    val viaParseFile = WarcSource.listFiles(dir).toSeq
+      .flatMap(f => Warc.parseFile(java.nio.file.Files.readAllBytes(
+        java.nio.file.Paths.get(new java.net.URI(f)))))
       .map(p => (p.url, java.util.Arrays.hashCode(p.html), p.warc_ts.getTime))
-      .collect().sortBy(_._1)
+      .sortBy(_._1)
     assert(viaDsv2.length === 500)
-    assert(viaDsv2.toSeq === viaBinary.toSeq)
+    assert(viaDsv2.toSeq === viaParseFile)
     // one partition per archive file
     assert(ss.read.format("warc").load(dir).rdd.getNumPartitions === 4)
   }
@@ -566,5 +582,53 @@ class WarcSpec extends AnyFunSuite with BeforeAndAfterAll {
       assert(new String(resolved.find(_.warc_ts.getTime == t).get.html, "UTF-8") == g1,
         s"capture at $t must resolve to generation one")
     }
+  }
+
+  test("hidden files are not archives: a writer's leftover .tmp- attempt and _-names are never read") {
+    val dir = java.nio.file.Files.createTempDirectory("warchidden")
+    def put(name: String, url: String, warcType: String = "response"): Unit = {
+      val bos = new java.io.ByteArrayOutputStream()
+      val gz = new java.util.zip.GZIPOutputStream(bos)
+      gz.write(Warc.record(url, 1000L, "<p>x</p>".getBytes("UTF-8"), http = warcType == "response",
+        warcType = warcType))
+      gz.close()
+      java.nio.file.Files.write(dir.resolve(name), bos.toByteArray)
+    }
+    put("part-00000.warc.gz", "https://real/page")
+    put(".tmp-abcd1234-7-part-00001.warc.gz", "https://tmp/page")
+    put("_SUCCESS.warc", "https://underscore/page")
+    put("wet-00000.warc.gz", "https://real/text", warcType = "conversion")
+    put(".tmp-abcd1234-8-wet-00001.warc.gz", "https://tmp/text", warcType = "conversion")
+    assert(WarcSource.listFiles(dir.toString).map(f => new java.io.File(new java.net.URI(f)).getName).toSeq ==
+      Seq("part-00000.warc.gz", "wet-00000.warc.gz"))
+    assert(Warc.read(spark, dir.toString).collect().map(_.url).toSeq == Seq("https://real/page"))
+    assert(Warc.readWet(spark, dir.toString).collect().map(_.url).toSeq == Seq("https://real/text"))
+  }
+
+  test("writeWithCdx over writeRecords(zstd) output: read returns only the new records") {
+    val ss = spark
+    import ss.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("warccdxzst").toString
+    def recs(prefix: String) = (0 until 6).map(i =>
+      Warc.WarcRec(s"https://$prefix/$i", 1000L + i, Warc.httpBlock(s"<p>$prefix $i</p>".getBytes("UTF-8"))))
+    Warc.writeRecords(spark.createDataset(recs("old")).repartition(3), dir, zstd = true)
+    Warc.writeWithCdx(spark.createDataset(recs("new")).repartition(2), dir)
+    val names = new java.io.File(dir).listFiles().map(_.getName)
+    assert(!names.exists(_.endsWith(".warc.zst")), s"stale zstd parts: ${names.mkString(",")}")
+    assert(Warc.read(spark, dir).collect().map(_.url).sorted.toSeq == recs("new").map(_.url))
+    assert(Warc.readCdx(spark, dir).count() == 6L)
+  }
+
+  test("writeRecords over writeWithCdx output leaves no .cdx sidecar behind") {
+    val ss = spark
+    import ss.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("warcnocdx").toString
+    val recs = (0 until 6).map(i => Warc.WarcRec(s"https://h/$i", 1000L + i, s"<p>$i</p>".getBytes("UTF-8")))
+    Warc.writeWithCdx(spark.createDataset(recs).repartition(2), dir)
+    assert(new java.io.File(dir).listFiles().count(_.getName.endsWith(".cdx")) == 2)
+    Warc.writeRecords(spark.createDataset(recs).repartition(2), dir, gzip = true)
+    val names = new java.io.File(dir).listFiles().map(_.getName)
+    assert(!names.exists(_.endsWith(".cdx")), s"stale sidecars: ${names.mkString(",")}")
+    assert(Warc.read(spark, dir).count() == 6L)
   }
 }
